@@ -3,8 +3,9 @@ package graft.calc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.TickOps
+import graft.plans.AnchorEmit
 
 /** W14 — the anchored_vwap_points output table
   * (compute_anchor_snapshots + flush loops, candle_to_calcs.py:226-249,
@@ -33,7 +34,8 @@ import graft.operators.TickOps
   *    buffer+chunk frame: global per-symbol row number rebased to the chunk
   *    start plus min(priorRows, bufferSize);
   *  - keep-last dedup on (symbol, timeframe, anchor_timestamp) by snapshot
-  *    time (deduplicate_anchored_vwap_points, :183-193).
+  *    time (deduplicate_anchored_vwap_points, :183-193), ties by
+  *    [[typePriority]].
   *
   * Chunks are 30-day spans of event time anchored at the Unix epoch (the
   * reference anchors at the job's --start-date; pass `chunkOriginUs` to
@@ -57,35 +59,62 @@ object AnchorSnapshots {
   /** The snapshot rows BEFORE the keep-last dedup — the full anchor × last
     * row cross per (symbol, chunk). Exposed separately so the daily-anchor
     * subset can be oracle-checked without the peak flags (which can steal a
-    * colliding anchor_timestamp in the dedup); the dedup itself is G5,
-    * oracle-verified on its own.
+    * colliding anchor_timestamp in the dedup).
     */
   def snapshots(candles: DataFrame, timeframe: String = "1s",
                 chunkDays: Int = DefaultChunkDays, bufferSize: Int = 10000,
-                chunkOriginUs: Long = 0L, withTails: Boolean = false): DataFrame = {
-    val chunkWidthUs = chunkUs(chunkDays)
-    // r18 (guide §2.4: one full-frame exchange where two ran): the daily
-    // running-extreme and first-trigger flags are per-(symbol, local_date)
-    // running windows, but every OTHER full-frame pass here is keyed
-    // (symbol, chunk) — and an epoch-aligned 30-day chunk boundary (UTC
-    // midnight) always splits an NY local date, so the date windows are not
-    // nested in the chunk windows and used to force their own full-frame
-    // exchange+sort before the peak pass's. Instead the daily state is
-    // computed per (symbol, chunk, local_date) — clustering that the peak
-    // pass's hash(symbol, chunk) exchange already satisfies, so only a
-    // partition-local sort is added — and the dates straddling a chunk
-    // boundary are patched with a broadcast CARRY: per (symbol, chunk,
-    // local_date), the max-high/min-low/trigger-hit totals of the same
-    // date's rows in EARLIER chunks, rolled up on a symbols × dates grain
-    // table. greatest()/least() skip nulls, so a date fully inside one
-    // chunk (null carry) and a date's first row (empty strict prefix) fall
-    // out of the same expressions; flag semantics are exactly
-    // [[WindowCalcs.withDailyRunningExtremes]]'s (strict >/< against the
-    // lagged running extreme ⇔ against the max/min over the date's strict
-    // prefix). The (symbol, chunk) row-count rollup `prior` now derives
-    // from the same grain table instead of its own full-frame aggregation.
+                chunkOriginUs: Long = 0L, withTails: Boolean = false): DataFrame =
+    anchors(candles, timeframe, chunkDays, bufferSize, chunkOriginUs, withTails, keepLast = false)
+
+  /** The deduped table: one row per (symbol, timeframe, anchor_timestamp).
+    * Different anchor TYPES can share an anchor_timestamp (a peak row that
+    * is also the daily high). The reference's keep-last then depends on
+    * dict-insertion order — irreproducible — so the survivor is pinned by
+    * [[typePriority]]: peak/valley beats daily types, larger granularity
+    * beats smaller.
+    */
+  def anchoredVwapPoints(candles: DataFrame, timeframe: String = "1s",
+                         chunkDays: Int = DefaultChunkDays, bufferSize: Int = 10000,
+                         chunkOriginUs: Long = 0L, withTails: Boolean = false): DataFrame =
+    anchors(candles, timeframe, chunkDays, bufferSize, chunkOriginUs, withTails, keepLast = true)
+
+  /** Collision-tiebreak order, lowest first (see [[anchoredVwapPoints]]). */
+  val typePriority: Seq[String] = Seq(
+    "daily_4am", "daily_930", "daily_4pm", "daily_high", "daily_low",
+    "micro_peak", "micro_valley", "minor_peak", "minor_valley",
+    "major_peak", "major_valley")
+
+  /** Both entry points are ONE native pass: the peaks exec in its
+    * anchor-emitting mode ([[graft.plans.AnchorEmit]]) buffers each
+    * timestamp-sorted (symbol, chunk) group for find_peaks and, from the
+    * same buffer, computes the row indices, the chunk's last row and last
+    * local date, the daily flags, the first triggers, the last-hit
+    * extremes and the suffix sums, emitting only anchor rows (deduped
+    * in-pass under `keepLast`). One hash(symbol, chunk) exchange and one
+    * sort feed it; everything it reads is attached map-side, before the
+    * exchange, and only those columns cross it.
+    *
+    * The daily state runs per (symbol, chunk, local_date). An
+    * epoch-aligned 30-day chunk boundary (UTC midnight) always splits a
+    * New York local date, so the dates straddling a boundary are patched
+    * with a broadcast CARRY: per (symbol, chunk, local_date), the
+    * max-high/min-low/trigger-hit totals of the same date's rows in EARLIER
+    * chunks, rolled up on a symbols × dates grain table. Comparing against
+    * the date's strict prefix in this chunk and the carry is exactly
+    * [[WindowCalcs.withDailyRunningExtremes]]'s flag (strict >/< against
+    * the lagged running extreme). The same grain table yields `prior_rows`,
+    * the row count of the symbol's earlier chunks, for the cidx rebase: one
+    * support branch and one broadcast join attach everything (a second
+    * support branch would re-run the candle aggregation, which exchange
+    * reuse cannot dedupe across two different-keyed aggregations). No
+    * per-symbol window over the full history anywhere: at 100 TB no task
+    * sees more than one (symbol, chunk).
+    */
+  private def anchors(candles: DataFrame, timeframe: String, chunkDays: Int,
+                      bufferSize: Int, chunkOriginUs: Long, withTails: Boolean,
+                      keepLast: Boolean): DataFrame = {
     val sess = SessionLabels.withSessionLabels(candles)
-      .withColumn("chunk", expr(s"(unix_micros(timestamp) - ${chunkOriginUs}L) div ${chunkWidthUs}L"))
+      .withColumn("chunk", expr(s"(unix_micros(timestamp) - ${chunkOriginUs}L) div ${chunkUs(chunkDays)}L"))
     val hits: Seq[(String, Column)] = Triggers.map { case (name, h, m) =>
       name -> (col("local_hour") === h && col("local_minute") === m)
     }
@@ -96,13 +125,6 @@ object AnchorSnapshots {
     val grain = sess.groupBy(col("symbol").as("ds"), col("chunk").as("dc"),
         col("local_date").as("dd"))
       .agg(grainAggs.head, grainAggs.tail: _*)
-    // ONE support table serves both the daily carry AND the cross-chunk
-    // row-count offset (`prior_rows`, the cidx rebase): prior_rows is a
-    // RANGE window over earlier chunks on the same grain rows, so a single
-    // broadcast join attaches everything — a second support branch would
-    // re-run the candle aggregation (exchange reuse cannot dedupe two
-    // different-keyed aggregations over it; measured as an sf0.1 regression
-    // before this merge).
     val wDatePrev = Window.partitionBy("ds", "dd").orderBy("dc")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wChunkPrior = Window.partitionBy("ds").orderBy("dc")
@@ -117,168 +139,31 @@ object AnchorSnapshots {
           hits.map { case (name, _) =>
             coalesce(sum(col(s"g_$name")).over(wDatePrev), lit(0L)).as(s"c_$name")
           }: _*)
-    // The peak pass runs FIRST: its native node plants the one
-    // hash(symbol, chunk) exchange + (symbol, chunk, timestamp) sort that
-    // every window below rides (its output partitioning/ordering survive
-    // the node — PlanSpec-pinned).
-    val withPeaks = PeaksPass.withPeakFlags(sess, Seq("chunk"))
 
-    // cidx = position in the reference's buffer+chunk frame = in-chunk row
-    // number + min(rows before this chunk, bufferSize). The in-chunk number
-    // comes from a (symbol, chunk)-keyed window — bounded partitions — and
-    // the cross-chunk offset from a per-(symbol, chunk) count rollup whose
-    // running sum runs over symbols × chunks rows (tiny), broadcast back.
-    // No global per-symbol window anywhere: at 100 TB no task ever sees a
-    // symbol's full history.
-    val wChunkOrd = Window.partitionBy("symbol", "chunk").orderBy("timestamp")
-    val wChunk = Window.partitionBy("symbol", "chunk")
-    val base0 = withPeaks
-      .withColumn("crn", row_number().over(wChunkOrd))
-      .withColumn("last_date", max(col("local_date")).over(wChunk))
-      // the chunk's last row (the snapshot row every anchor pairs with) is
-      // carried by the SAME whole-partition window, not by filtering a
-      // second branch of this frame and self-joining: the uncached branch
-      // pair re-ran the entire candles→peaks→windows chain twice (measured
-      // at sf10: the peaks kernel alone is seconds per hot chunk) and paid
-      // an SMJ back. max(timestamp) IS the last row's timestamp; crn is
-      // timestamp-ordered so max(crn) is its row number, and cidx is
-      // crn−1+const within the chunk, so the last cidx = max(crn)−1+const.
-      .withColumn("current_snapshot_timestamp", max(col("timestamp")).over(wChunk))
-      .withColumn("last_crn", max(col("crn")).over(wChunk))
+    // Per-row tail terms for [[anchoredVwapReal]], in Spark's own decimal
+    // arithmetic; the pass sums them exactly over each anchor's chunk
+    // suffix (see the scaladoc there for the exactness contract).
+    val tailTerms = if (!withTails) Nil else {
+      val vD = col("volume").cast(DecimalType(18, 4))
+      Seq((col("close").cast(DecimalType(18, 2)) * vD).as("row_pv"), vD.as("row_v"))
+    }
+    val input = sess
+      .select(Seq(col("symbol"), col("chunk"), col("timestamp"), col("high"), col("low"),
+        col("close"), col("local_date")) ++
+        hits.map { case (name, hit) => hit.as(s"hit_$name") } ++ tailTerms: _*)
       .join(broadcast(carry),
         col("symbol") === col("ds") && col("chunk") === col("dc") &&
           col("local_date") === col("dd"))
-      .withColumn("cidx",
-        (col("crn") - 1 + least(col("prior_rows"), lit(bufferSize.toLong))).cast("long"))
-      .withColumn("current_idx",
-        (col("last_crn") - 1 + least(col("prior_rows"), lit(bufferSize.toLong))).cast("long"))
-
-    // Daily flags, per (symbol, chunk, local_date) + carry (see the r18
-    // note above). local_date is monotone in timestamp within a chunk, so
-    // the added sort is a no-op permutation — but partition-LOCAL either
-    // way: no exchange.
-    val wCD = Window.partitionBy("symbol", "chunk", "local_date")
-      .orderBy("timestamp")
-    val wCDIncl = wCD.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wCDPre = wCD.rowsBetween(Window.unboundedPreceding, -1)
-    val base = hits.foldLeft(
-      base0
-        .withColumn("is_new_daily_high",
-          coalesce((col("high") >
-            greatest(max(col("high")).over(wCDPre), col("c_high"))).cast("int"),
-            lit(0)))
-        .withColumn("is_new_daily_low",
-          coalesce((col("low") <
-            least(min(col("low")).over(wCDPre), col("c_low"))).cast("int"),
-            lit(0)))) {
-        case (df, (name, hit)) =>
-          df.withColumn(s"__first_$name",
-            hit && (col(s"c_$name") + sum(hit.cast("long")).over(wCDIncl)) === 1)
-      }
-      .drop(Seq("ds", "dc", "dd", "c_high", "c_low", "prior_rows") ++
-        hits.map { case (name, _) => s"c_$name" }: _*)
-
-    // ONE pass over `base` for all 27 anchor kinds. The first cut of this
-    // operator built a filtered frame per kind and unioned them — 27
-    // recomputations of the whole candles→peaks upstream (measured: 6.8 s
-    // of the w14 row's cost at sf0.1 was exactly that replay). Instead,
-    // every per-kind "row_number() == 1 among the hits" rank collapses to a
-    // cumulative-sum-of-hits flag computed on base once, each row builds an
-    // array of its anchor candidates, and one explode+filter emits them.
-    // The last-among-hits rank deliberately uses partition-total − strict
-    // prefix, not an UnboundedFollowing frame (which Spark re-aggregates
-    // per row — see the anchoredVwapReal note).
-    val wChunkPre = Window.partitionBy("symbol", "chunk").orderBy("timestamp")
-      .rowsBetween(Window.unboundedPreceding, -1)
-
-    def lastHitOfChunk(hit: Column): Column = {
-      val h = hit.cast("int")
-      hit && (sum(h).over(wChunk) - coalesce(sum(h).over(wChunkPre), lit(0))) === 1
-    }
-
-    def candidate(cond: Column, anchorType: String, price: String): Column =
-      when(cond, struct(lit(anchorType).as("anchor_type"),
-        col(price).as("price_at_anchor"))).otherwise(lit(null))
-
-    val peakCands = PeaksPass.configs.flatMap { case (name, _, _) =>
-      Seq(
-        candidate(col(s"is_${name}_peak") === 1, s"${name}_peak", "high"),
-        candidate(col(s"is_${name}_valley") === 1, s"${name}_valley", "low"))
-    }
-    // the per-day first-hit flag was computed up at the (symbol,
-    // local_date) pass (see `labeled`); only the chunk-local last_date
-    // restriction — which needs the chunk window — applies here, map-side
-    val triggerCands = Triggers.map { case (name, _, _) =>
-      candidate(
-        col(s"__first_$name") && col("local_date") === col("last_date"),
-        name, "close")
-    }
-    val extremeCands = Seq(
-      candidate(
-        lastHitOfChunk(col("is_new_daily_high") === 1 && col("local_date") === col("last_date")),
-        "daily_high", "high"),
-      candidate(
-        lastHitOfChunk(col("is_new_daily_low") === 1 && col("local_date") === col("last_date")),
-        "daily_low", "low"))
-
-    // Optional per-row chunk-suffix sums for [[anchoredVwapReal]]: each
-    // anchor's VWAP range is [anchor row .. chunk's last row], i.e. the
-    // suffix AT the anchor's own row — so the sums ride these same
-    // (symbol, chunk) windows and survive the explode, instead of a second
-    // candling of the input joined back by (symbol, anchor_timestamp).
-    // Suffix = whole-partition total − strict prefix, NOT an
-    // UnboundedFollowing frame (Spark re-aggregates those per row; see the
-    // anchoredVwapReal scaladoc for the decimal-exactness contract).
-    val withTailCols = if (!withTails) base else {
-      import org.apache.spark.sql.types.DecimalType
-      val pD = col("close").cast(DecimalType(18, 2))
-      val vD = col("volume").cast(DecimalType(18, 4))
-      val pv = col("__pv")
-      base.withColumn("__pv", pD * vD)
-        .withColumn("tail_pv",
-          (sum(pv).over(wChunk) - coalesce(sum(pv).over(wChunkPre), lit(0)))
-            .cast(DecimalType(38, 2)))
-        .withColumn("tail_v",
-          (sum(vD).over(wChunk) - coalesce(sum(vD).over(wChunkPre), lit(0)))
-            .cast(DecimalType(38, 2)))
-    }
+      .drop("ds", "dc", "dd")
 
     val tailCols = if (withTails) Seq(col("tail_pv"), col("tail_v")) else Nil
-    withTailCols
-      .withColumn("__cands", array(peakCands ++ triggerCands ++ extremeCands: _*))
-      .withColumn("__a", explode(filter(col("__cands"), _.isNotNull)))
+    PeaksPass.anchorRows(input, AnchorEmit(bufferSize, keepLast, withTails))
       .select(Seq(
-        col("symbol"), lit(timeframe).as("timeframe"),
-        col("__a.anchor_type").as("anchor_type"),
-        col("timestamp").as("anchor_timestamp"), col("cidx").as("anchor_idx"),
-        col("__a.price_at_anchor").as("price_at_anchor"),
+        col("symbol"), lit(timeframe).as("timeframe"), col("anchor_type"),
+        col("anchor_timestamp"), col("anchor_idx"), col("price_at_anchor"),
         col("current_snapshot_timestamp"), col("current_idx"),
         lit(null).cast("double").as("anchored_vwap")) ++ tailCols: _*)
   }
-
-  def anchoredVwapPoints(candles: DataFrame, timeframe: String = "1s",
-                         chunkDays: Int = DefaultChunkDays, bufferSize: Int = 10000,
-                         chunkOriginUs: Long = 0L, withTails: Boolean = false): DataFrame = {
-    val snaps = snapshots(candles, timeframe, chunkDays, bufferSize, chunkOriginUs, withTails)
-    // Dedup ties: different anchor TYPES can share an anchor_timestamp (a
-    // peak row that is also the daily high). The reference's keep-last then
-    // depends on dict-insertion order — irreproducible — so we pin a
-    // documented priority: peak/valley beats daily types, larger granularity
-    // beats smaller.
-    val priority = typePriority.zipWithIndex
-      .foldLeft(lit(-1)) { case (acc, (t, i)) =>
-        when(col("anchor_type") === t, lit(i)).otherwise(acc)
-      }
-    TickOps.dedupKeepLast(snaps,
-      Seq("symbol", "timeframe", "anchor_timestamp"),
-      Seq(col("current_snapshot_timestamp"), priority))
-  }
-
-  /** Collision-tiebreak order, lowest first (see dedup note above). */
-  val typePriority: Seq[String] = Seq(
-    "daily_4am", "daily_930", "daily_4pm", "daily_high", "daily_low",
-    "micro_peak", "micro_valley", "minor_peak", "minor_valley",
-    "major_peak", "major_valley")
 
   /** M4 extension — [[anchoredVwapPoints]] with the `anchored_vwap` column
     * actually computed: Σ close·volume / Σ volume over [anchor row ..
@@ -287,10 +172,9 @@ object AnchorSnapshots {
     * computation as the natural extension.
     *
     * Because every snapshot is its chunk's LAST row, the anchored range is
-    * exactly a per-(symbol, chunk) SUFFIX — one bounded window computes
-    * suffix sums for every candle, and each anchor attaches its own row's
-    * values by (symbol, anchor_timestamp) equality. No range join, no
-    * re-scan per anchor; partitions stay chunk-bounded at any scale.
+    * exactly a per-(symbol, chunk) SUFFIX — the anchor pass sums it for
+    * each anchor row in the same buffered chunk. No range join, no re-scan
+    * per anchor; partitions stay chunk-bounded at any scale.
     * Arithmetic is exact-decimal so the result is accumulation-order-
     * independent and the DuckDB oracle hash-compares bit-for-bit; the
     * single double division happens last.
@@ -306,16 +190,12 @@ object AnchorSnapshots {
   def anchoredVwapReal(candles: DataFrame, timeframe: String = "1s",
                        chunkDays: Int = DefaultChunkDays, bufferSize: Int = 10000,
                        chunkOriginUs: Long = 0L): DataFrame = {
-    // The suffix sums ride the snapshot pass's own (symbol, chunk) windows
-    // (`withTails` — total − strict prefix, both O(rows); an
-    // UnboundedFollowing frame re-aggregates per row, observed wedging the
-    // sf1 hot symbol's 500k-row chunk for 40+ minutes) and survive the
-    // explode on the anchor's own row — the earlier form candled the input
-    // a SECOND time for a tails frame and SMJ'd it back on
-    // (symbol, anchor_timestamp). The scale-2 recast is lossless under the
-    // whole-number-volume precondition (scaladoc above) and keeps the
-    // scaled numerator under 2^53 so the final decimal→double casts are
-    // exact in both engines (see Det.centsDouble for the failure mode).
+    // The suffix sums come out of the anchor pass itself (`withTails`: one
+    // backward scan of the buffered chunk), on the anchor's own row. The
+    // scale-2 recast is lossless under the whole-number-volume precondition
+    // (scaladoc above) and keeps the scaled numerator under 2^53 so the
+    // final decimal→double casts are exact in both engines (see
+    // Det.centsDouble for the failure mode).
     anchoredVwapPoints(candles, timeframe, chunkDays, bufferSize, chunkOriginUs,
         withTails = true)
       .drop("anchored_vwap")

@@ -1,9 +1,11 @@
 package graft.calc
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{IntegerType, StructField}
 
 import graft.calc.ta.PeakFinder
+import graft.plans.{AnchorEmit, PeaksPassPlan}
 
 /** W11 — peak/valley flags at three granularities
   * (label_peaks_valleys_multi, candle_to_calcs.py:528-558): find_peaks on
@@ -52,9 +54,17 @@ object PeaksPass {
     * instead of re-shuffling (the old mapPartitions route paid both the
     * Row encoder and a second wide exchange).
     */
-  def withPeakFlags(df: DataFrame, extraGroupCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    PlanBridge.ofRows(df.sparkSession, graft.plans.PeaksPassPlan(
-      PlanBridge.analyzed(df), extraGroupCols, graft.plans.PeaksPassPlan.mkOutAttrs))
+  def withPeakFlags(df: DataFrame, extraGroupCols: Seq[String] = Nil): DataFrame =
+    PlanBridge.ofRows(df.sparkSession, PeaksPassPlan(
+      PlanBridge.analyzed(df), extraGroupCols, PeaksPassPlan.mkOutAttrs))
+
+  /** The same pass in its anchor-emitting mode: one row per W14 anchor of
+    * each (symbol, chunk) group of `df`, which must carry the columns of
+    * [[AnchorEmit]]'s input contract ([[AnchorSnapshots]] builds them).
+    */
+  private[calc] def anchorRows(df: DataFrame, spec: AnchorEmit): DataFrame = {
+    val child = PlanBridge.analyzed(df)
+    PlanBridge.ofRows(df.sparkSession,
+      PeaksPassPlan(child, Seq("chunk"), spec.outAttrs(child.output), Some(spec)))
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong`: the testdata `events.parquet` carries INT64
   *    TIMESTAMP(NANOS) which Spark has no native type for; we read the raw
   *    nanos and convert with integer division (see [[Tables.ticks]]).
-  *  - shuffle partitions sized for the local[32] harness, with AQE enabled so
-  *    the same plans re-partition themselves on a real cluster.
+  *  - shuffle partitions sized to the local core count (at least 4), with
+  *    AQE enabled so the same plans re-partition themselves on a real cluster.
   */
 object GraftSession {
 
@@ -61,10 +61,8 @@ object GraftSession {
   private lazy val warehouseDir: String =
     java.nio.file.Files.createTempDirectory("graft_warehouse_").toString
 
-  /** Default to every core on the machine (the harness contract is
-    * local[32]); `SPARK_GRAFT_CPUS` overrides for constrained runs. The
-    * old fallback of 4 silently ran Verify/Bench 8× under-parallelized
-    * whenever the env var was absent.
+  /** Default to every core on the machine; `SPARK_GRAFT_CPUS` overrides
+    * for constrained runs.
     */
   private def cpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 import graft.calc.PeaksPass
@@ -32,13 +32,19 @@ import graft.calc.PeaksPass
   * exactly why the group key must include a time chunk at scale: it bounds
   * the buffered group, and the flags near chunk edges match the
   * reference's own chunked output.
+  *
+  * With `anchors` set the node runs in its anchor-emitting mode
+  * ([[AnchorEmit]]): the output is the W14 snapshot rows alone, not the
+  * flagged input rows.
   */
 final case class PeaksPassPlan(
     child: LogicalPlan,
     extraGroupCols: Seq[String],
-    outAttrs: Seq[Attribute]) extends UnaryNode {
+    outAttrs: Seq[Attribute],
+    anchors: Option[AnchorEmit] = None) extends UnaryNode {
 
-  override def output: Seq[Attribute] = child.output ++ outAttrs
+  override def output: Seq[Attribute] =
+    if (anchors.isEmpty) child.output ++ outAttrs else outAttrs
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(outAttrs)
@@ -65,8 +71,8 @@ object PeaksPassPlan {
   */
 object PeaksPassStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PeaksPassPlan(child, extraGroupCols, outAttrs) =>
-      PeaksPassExec(planLater(child), extraGroupCols, outAttrs) :: Nil
+    case PeaksPassPlan(child, extraGroupCols, outAttrs, anchors) =>
+      PeaksPassExec(planLater(child), extraGroupCols, outAttrs, anchors) :: Nil
     case _ => Nil
   }
 }
@@ -74,9 +80,11 @@ object PeaksPassStrategy extends SparkStrategy {
 final case class PeaksPassExec(
     child: SparkPlan,
     extraGroupCols: Seq[String],
-    outAttrs: Seq[Attribute]) extends UnaryExecNode {
+    outAttrs: Seq[Attribute],
+    anchors: Option[AnchorEmit]) extends UnaryExecNode {
 
-  override def output: Seq[Attribute] = child.output ++ outAttrs
+  override def output: Seq[Attribute] =
+    if (anchors.isEmpty) child.output ++ outAttrs else outAttrs
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(outAttrs)
@@ -93,12 +101,16 @@ final case class PeaksPassExec(
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq((groupKeys :+ attr("timestamp")).map(SortOrder(_, Ascending)))
 
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-
-  /** Flat append — the child's (group, timestamp) sort survives, so the
-    * downstream (symbol, chunk) windows skip their sort too.
+  /** Flag mode is a flat append: the child's (group, timestamp) exchange
+    * and sort survive, so downstream (symbol, chunk) windows skip both.
+    * Anchor rows drop the group columns, so they promise neither.
     */
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override def outputPartitioning: Partitioning =
+    if (anchors.isEmpty) child.outputPartitioning
+    else UnknownPartitioning(child.outputPartitioning.numPartitions)
+
+  override def outputOrdering: Seq[SortOrder] =
+    if (anchors.isEmpty) child.outputOrdering else Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -108,59 +120,61 @@ final case class PeaksPassExec(
     val resultExprs = output
     val joinedSchema = childOutput ++ outAttrs
     val nOut = outAttrs.length
+    val outTypes = outAttrs.map(_.dataType)
+    val spec = anchors
 
     child.execute().mapPartitions({ iter =>
       val keyProj = UnsafeProjection.create(keys, childOutput)
-      val project = UnsafeProjection.create(resultExprs, joinedSchema)
-      val join = new JoinedRow
-      val flagVals = new Array[Any](nOut)
-      val flagRow = new GenericInternalRow(flagVals)
-
-      new Iterator[InternalRow] {
-        private var out: Iterator[InternalRow] = Iterator.empty
-        private var pending: InternalRow = null // already copied
-
-        private def fill(): Unit = {
-          while (!out.hasNext && (pending != null || iter.hasNext)) {
-            val rows = ArrayBuffer.empty[InternalRow]
-            val highs = new scala.collection.mutable.ArrayBuilder.ofDouble
-            val lows = new scala.collection.mutable.ArrayBuilder.ofDouble
-            val first = if (pending != null) pending else iter.next().copy()
-            pending = null
-            val key: UnsafeRow = keyProj(first).copy()
-            rows += first
-            highs += first.getDouble(iH)
-            lows += first.getDouble(iL)
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next()
-              if (keyProj(r) == key) {
-                val c = r.copy()
-                rows += c
-                highs += c.getDouble(iH)
-                lows += c.getDouble(iL)
-              } else {
-                pending = r.copy()
-                done = true
+      val emit: (ArrayBuffer[InternalRow], Array[Array[Int]]) => Iterator[InternalRow] =
+        spec match {
+          case Some(a) => new AnchorEmitter(childOutput, a, outTypes).emit
+          case None =>
+            val project = UnsafeProjection.create(resultExprs, joinedSchema)
+            val join = new JoinedRow
+            val flagVals = new Array[Any](nOut)
+            val flagRow = new GenericInternalRow(flagVals)
+            (rows, fl) => {
+              var i = -1
+              rows.iterator.map { r =>
+                i += 1
+                var j = 0
+                while (j < nOut) { flagVals(j) = fl(j)(i); j += 1 }
+                project(join(r, flagRow))
               }
             }
-            val fl = PeaksPass.flags(highs.result(), lows.result())
-            var i = -1
-            out = rows.iterator.map { r =>
-              i += 1
-              var j = 0
-              while (j < nOut) { flagVals(j) = fl(j)(i); j += 1 }
-              project(join(r, flagRow))
-            }
-          }
         }
-
-        override def hasNext: Boolean = { fill(); out.hasNext }
-        override def next(): InternalRow = { fill(); out.next() }
+      PeaksPassExec.sortedGroups(iter, keyProj).flatMap { rows =>
+        emit(rows, PeaksPass.flags(Array.tabulate(rows.length)(rows(_).getDouble(iH)),
+          Array.tabulate(rows.length)(rows(_).getDouble(iL))))
       }
-    }, preservesPartitioning = true)
+    }, preservesPartitioning = spec.isEmpty)
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): PeaksPassExec =
     copy(child = newChild)
+}
+
+object PeaksPassExec {
+  /** Buffers each run of equal group keys of a key-sorted partition, one
+    * group at a time (rows copied).
+    */
+  private def sortedGroups(iter: Iterator[InternalRow],
+                           keyProj: UnsafeProjection): Iterator[ArrayBuffer[InternalRow]] =
+    new Iterator[ArrayBuffer[InternalRow]] {
+      private var pending: InternalRow = null
+
+      override def hasNext: Boolean = pending != null || iter.hasNext
+
+      override def next(): ArrayBuffer[InternalRow] = {
+        val first = if (pending != null) pending else iter.next().copy()
+        pending = null
+        val key: UnsafeRow = keyProj(first).copy()
+        val rows = ArrayBuffer(first)
+        while (pending == null && iter.hasNext) {
+          val r = iter.next()
+          if (keyProj(r) == key) rows += r.copy() else pending = r.copy()
+        }
+        rows
+      }
+    }
 }

@@ -901,8 +901,8 @@ object QueriesDomain {
     * daily trigger + extreme anchors — chunking, the buffer-rebased cidx
     * arithmetic, day-first trigger selection, last-new-extreme selection and
     * the anchor × chunk-last-row cross all replicated in window SQL. Peak
-    * anchors are excluded (find_peaks is not SQL-expressible) and the final
-    * keep-last dedup is covered by g5's own oracle.
+    * anchors are excluded (see w14p) and the final keep-last dedup is
+    * covered by the full-table oracle (w14fullSql).
     */
   private def w14d(s: SparkSession, dir: String): DataFrame =
     AnchorSnapshots.snapshots(candles(s, dir))
@@ -1088,12 +1088,14 @@ object QueriesDomain {
     * per (symbol, ts), so the composition is checked against composed
     * single-operator oracles, not against itself.
     *
-    * Scale shape: stage 1 is map-side until the one (symbol, µs) dedup
-    * shuffle; candling reuses that exchange's hash layout; the H pass is
-    * the native single-exchange Catalyst operator; anchors add one
-    * per-(symbol, chunk) pass over the SAME candle frame (cached — each
-    * branch would otherwise recompute the whole upstream chain) and a
-    * broadcast-sized join back. No branch re-reads the raw ticks.
+    * Scale shape: stage 1 is map-side until the hash(symbol, timestamp)
+    * dedup shuffle; candling adds its own hash(symbol, bucket) exchange;
+    * the H pass is the native single-exchange Catalyst operator over
+    * hash(symbol); anchors are one native pass over hash(symbol, chunk) of
+    * the SAME candle frame (cached — each branch would otherwise recompute
+    * the whole upstream chain), fed by a broadcast carry rolled up from it,
+    * and come back through a per-(symbol, ts) count and a broadcast-sized
+    * join. No branch re-reads the raw ticks.
     */
   private def pipelineFull(s: SparkSession, dir: String): DataFrame = {
     val valid = TickOps.validate(ticks(s, dir)).valid
@@ -1132,7 +1134,8 @@ object QueriesDomain {
     * flag becomes an anchor crossed with the chunk's last row — the peak half
     * of the reference's anchor emission (candle_to_calcs.py:660-662). With
     * w14d this closes W14: daily triggers + extremes + peaks all hash-checked
-    * pre-dedup; the final keep-last dedup is G5's own oracle.
+    * pre-dedup; the final keep-last dedup is checked by the full-table
+    * oracle (w14fullSql).
     */
   private def w14p(s: SparkSession, dir: String): DataFrame =
     AnchorSnapshots.snapshots(candles(s, dir))

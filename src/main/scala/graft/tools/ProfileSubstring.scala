@@ -8,7 +8,7 @@ import graft.functions.SubstringDedup
 
 /** Stage-level wall-clock breakdown of `llm_substring_dedup`
   * ([[graft.functions.SubstringDedup.crossDocDupStats]]) — the heaviest LLM
-  * row at sf10. Mirrors [[ProfileW14]]: each stage is a CUMULATIVE
+  * row at sf10. Each stage is a CUMULATIVE
   * materialization from the raw documents, so the delta between consecutive
   * stages is that stage's own cost under the real (exchange-reusing) plan:
   *

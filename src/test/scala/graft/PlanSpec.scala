@@ -1,10 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{CandleAggregator, TickOps}
+import graft.plans.PeaksPassExec
 
 /** SURVEY §4's plan sanity checks, encoded: the physical plans the engine
   * relies on at 100 TB must actually be the plans Catalyst produces. These
@@ -300,6 +307,62 @@ class PlanSpec extends SparkSpec {
       s"the window must reuse the peaks exchange — found $chunkExchanges (symbol, chunk) exchanges:\n$ep")
     assert(ep.indexOf("Window") < ep.indexOf("PeaksPass"),
       "window sits directly above the peaks exec (deeper = later in toString)")
+  }
+
+  /** The plan as it runs: AQE's current physical plan when adaptive. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  private def hashKeys(e: ShuffleExchangeExec): Set[String] = e.outputPartitioning match {
+    case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+    case _ => Set.empty
+  }
+
+  test("w14 anchors: ONE native pass over ONE (symbol, chunk) exchange, no full-frame window") {
+    // The anchors are emitted by the peaks exec itself: no window chain over
+    // the (symbol, chunk) frame and no keep-last exchange on
+    // anchor_timestamp. The only windows left roll up the broadcast carry,
+    // a symbols × dates table.
+    val c = CandleAggregator.aggregate(Tables.ticks(spark, dir))
+    val p = physical(graft.calc.AnchorSnapshots.anchoredVwapPoints(c))
+    def frame(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: BroadcastExchangeExec => Nil
+      case _ => n +: n.children.flatMap(frame)
+    }
+    assert(p.collect { case e: PeaksPassExec => e }.size == 1, s"one peaks pass:\n$p")
+    assert(frame(p).count {
+      case e: ShuffleExchangeExec => hashKeys(e).contains("chunk")
+      case _ => false
+    } == 1, s"one hash exchange over (symbol, chunk) outside the carry:\n$p")
+    assert(!p.collect { case e: ShuffleExchangeExec => e }
+      .exists(hashKeys(_).contains("anchor_timestamp")),
+      s"the keep-last dedup needs no exchange of its own:\n$p")
+    assert(!frame(p).exists(_.isInstanceOf[WindowExec]),
+      s"no Window outside the broadcast carry:\n$p")
+  }
+
+  test("plan budget: pipeline_full runs at most 7 shuffle exchanges") {
+    // Counted over the AQE final plan like graftbench's plans.exchanges: a
+    // cached relation's plan counts once, a reused exchange not at all.
+    // Lower this budget when a change removes an exchange; raising it needs
+    // a measured reason.
+    val df = graft.queries.Registry.queries("pipeline_full")(spark, dir)
+    df.collect()
+    val seen = scala.collection.mutable.Set[AnyRef]()
+    def shuffles(n: SparkPlan): Int = n match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case s: QueryStageExec => shuffles(s.plan)
+      case _: ReusedExchangeExec => 0
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) shuffles(m.relation.cachedPlan) else 0
+      case e: ShuffleExchangeLike => 1 + e.children.map(shuffles).sum
+      case _ => (n.children ++ n.subqueries).map(shuffles).sum
+    }
+    val plan = df.queryExecution.executedPlan
+    val n = shuffles(plan)
+    assert(n <= 7, s"pipeline_full runs $n shuffle exchanges, budget 7:\n$plan")
   }
 
   test("sk_bloom production shape: bloom filter is map-side, below the join") {
