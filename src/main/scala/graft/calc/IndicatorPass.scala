@@ -105,7 +105,7 @@ object IndicatorPass {
 
     /** Consumes one candle and writes the indicator (+ pattern) values into
       * `out` starting at `off` — the allocation-light face the native
-      * [[graft.plans.IndicatorPassExec]] drives once per row.
+      * H-pass ([[graft.plans.PassKernel.Indicators]]) drives once per row.
       */
     def nextInto(open: Double, high: Double, low: Double, close: Double,
                  out: Array[Any], off: Int): Unit = {
@@ -249,22 +249,18 @@ object IndicatorPass {
     * candle frame (must have symbol, timestamp, open, high, low, close).
     * `bucket` engages the warm-up-overlap path for few-symbol skew.
     *
-    * Physically this plans the native [[graft.plans.IndicatorPassExec]]
-    * operator (strategy injected by GraftSession): the planner inserts the
+    * Physically this plans the native [[graft.plans.PassKernel.Indicators]]
+    * pass (strategy injected by GraftSession): the planner inserts the
     * (symbol[, bucket]) exchange+sort the operator DECLARES, and emission
     * is one codegen'd UnsafeProjection — no external-Row encode (which
     * measured 5× the kernel cost on the old mapPartitions route).
     */
   def withIndicators(candles: DataFrame, patterns: Boolean = false,
                      bucket: Option[BucketSpec] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    val spark = candles.sparkSession
-    val outAttrs = graft.plans.IndicatorPassPlan.mkOutAttrs(patterns)
-
+    import graft.plans.{NativePass, PassKernel}
     bucket match {
       case None =>
-        PlanBridge.ofRows(spark, graft.plans.IndicatorPassPlan(
-          PlanBridge.analyzed(candles), patterns, bucketed = false, outAttrs))
+        NativePass.over(candles, PassKernel.Indicators(patterns, bucketed = false))
 
       case Some(spec) =>
         val bUs = spec.bucketSeconds * 1000000L
@@ -282,8 +278,7 @@ object IndicatorPass {
           .withColumn("__b", col("__a").getField("b"))
           .withColumn("__w", col("__a").getField("w"))
           .drop("__a")
-        PlanBridge.ofRows(spark, graft.plans.IndicatorPassPlan(
-          PlanBridge.analyzed(exploded), patterns, bucketed = true, outAttrs))
+        NativePass.over(exploded, PassKernel.Indicators(patterns, bucketed = true))
     }
   }
 }

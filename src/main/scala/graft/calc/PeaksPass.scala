@@ -1,11 +1,10 @@
 package graft.calc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{IntegerType, StructField}
 
 import graft.calc.ta.PeakFinder
-import graft.plans.{AnchorEmit, PeaksPassPlan}
+import graft.plans.{AnchorEmit, NativePass, PassKernel}
 
 /** W11 — peak/valley flags at three granularities
   * (label_peaks_valleys_multi, candle_to_calcs.py:528-558): find_peaks on
@@ -46,8 +45,8 @@ object PeaksPass {
   /** Appends the 6 flag columns; groups by symbol (+ extraGroupCols), rows
     * ordered by timestamp within a group.
     *
-    * Physically this plans the native [[graft.plans.PeaksPassExec]]
-    * operator (strategy injected by GraftSession): the planner inserts the
+    * Physically this plans the native [[graft.plans.PassKernel.Peaks]]
+    * pass (strategy injected by GraftSession): the planner inserts the
     * declared (symbol[, chunk]) exchange+sort, the kernel consumes
     * InternalRows directly (no external-Row encode), and the exchange and
     * sort survive the node — downstream (symbol, chunk) windows reuse them
@@ -55,16 +54,12 @@ object PeaksPass {
     * Row encoder and a second wide exchange).
     */
   def withPeakFlags(df: DataFrame, extraGroupCols: Seq[String] = Nil): DataFrame =
-    PlanBridge.ofRows(df.sparkSession, PeaksPassPlan(
-      PlanBridge.analyzed(df), extraGroupCols, PeaksPassPlan.mkOutAttrs))
+    NativePass.over(df, PassKernel.Peaks(extraGroupCols))
 
   /** The same pass in its anchor-emitting mode: one row per W14 anchor of
     * each (symbol, chunk) group of `df`, which must carry the columns of
     * [[AnchorEmit]]'s input contract ([[AnchorSnapshots]] builds them).
     */
-  private[calc] def anchorRows(df: DataFrame, spec: AnchorEmit): DataFrame = {
-    val child = PlanBridge.analyzed(df)
-    PlanBridge.ofRows(df.sparkSession,
-      PeaksPassPlan(child, Seq("chunk"), spec.outAttrs(child.output), Some(spec)))
-  }
+  private[calc] def anchorRows(df: DataFrame, spec: AnchorEmit): DataFrame =
+    NativePass.over(df, PassKernel.Peaks(Seq("chunk"), Some(spec)))
 }

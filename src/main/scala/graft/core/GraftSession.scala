@@ -26,10 +26,7 @@ object GraftSession {
         graft.functions.VectorExprs.register(ext)
         graft.functions.TextExprs.register(ext)
         graft.functions.Sketches.register(ext)
-        ext.injectPlannerStrategy(_ => graft.plans.IndicatorPassStrategy)
-        ext.injectPlannerStrategy(_ => graft.plans.PeaksPassStrategy)
-        ext.injectPlannerStrategy(_ => graft.plans.GlobalIndexStrategy)
-        ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
+        ext.injectPlannerStrategy(_ => graft.plans.NativePassStrategy)
       }
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

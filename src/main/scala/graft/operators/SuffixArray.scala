@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.{NativePass, PassKernel}
+
 /** Distributed suffix-array construction by prefix doubling (the
   * Manber–Myers recurrence in its scan-parallel form, cf. Flick & Aluru,
   * SC'15), token-granular over a document corpus — the exact-substring
@@ -47,7 +49,7 @@ object SuffixArray {
 
   /** Global order index by `sortCols`: rows sorted, then assigned their
     * 0-based global position — via the native
-    * [[graft.plans.GlobalIndexPlan]] node: the planner inserts ONE range
+    * [[graft.plans.PassKernel.GlobalIndex]] pass: the planner inserts ONE range
     * exchange + sort (OrderedDistribution — no single partition anywhere),
     * and the index append zips the sorted InternalRows directly through a
     * codegen'd projection. No external-Row round-trip (the r14-flagged
@@ -57,17 +59,14 @@ object SuffixArray {
     * count — #partitions longs to the driver.
     */
   private[graft] def withGlobalIdx(df: DataFrame, sortCols: Seq[String]): DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession,
-      graft.plans.GlobalIndexPlan(
-        org.apache.spark.sql.graftbridge.PlanBridge.analyzed(df),
-        sortCols, graft.plans.GlobalIndexPlan.mkOutAttr("__idx")))
+    NativePass.over(df, PassKernel.GlobalIndex(sortCols))
 
   /** Order-preserving sparse re-rank: rows that compare equal on `keyCols`
     * share a rank, ranks are monotone in `keyCols` order. The rank value is
     * the group's first global index — sparse, which the doubling recurrence
     * is indifferent to.
     *
-    * Implementation: the native segmented scan ([[graft.plans.GlobalRankPlan]])
+    * Implementation: the native segmented scan ([[graft.plans.PassKernel.GlobalRank]])
     * — the frame leaving the range sort is already key-contiguous, so the
     * run-start rank needs only a #partitions-sized boundary exchange, not
     * the `groupBy(min)` + key join (two full hash exchanges per doubling
@@ -79,10 +78,7 @@ object SuffixArray {
     * groupBy(min)+join form, built inline as the test baseline.
     */
   private[graft] def rankBy(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(df.sparkSession,
-      graft.plans.GlobalRankPlan(
-        org.apache.spark.sql.graftbridge.PlanBridge.analyzed(df),
-        keyCols, graft.plans.GlobalIndexPlan.mkOutAttr("__rank")))
+    NativePass.over(df, PassKernel.GlobalRank(keyCols))
 
   /** Build the capped suffix array: one row per (doc_id, pos) with `sa_rank`
     * = the suffix's 1-based position in the global capped-token order

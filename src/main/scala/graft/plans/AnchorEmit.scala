@@ -3,16 +3,16 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.calc.{AnchorSnapshots, PeaksPass}
 
-/** The anchor-emitting mode of [[PeaksPassExec]]: instead of appending the
-  * six peak flags to every row, the pass emits only the W14 snapshot rows
-  * of each (symbol, chunk) group — semantics in
+/** The anchor-emitting mode of the peaks pass ([[PassKernel.Peaks]]):
+  * instead of appending the six peak flags to every row, the pass emits
+  * only the W14 snapshot rows of each (symbol, chunk) group — semantics in
   * [[graft.calc.AnchorSnapshots]].
   *
   * `keepLast` applies anchoredVwapPoints' keep-last dedup on
@@ -34,8 +34,7 @@ final case class AnchorEmit(bufferSize: Int, keepLast: Boolean, withTails: Boole
 
   /** Fresh output attributes for one node instance (stable exprIds). */
   def outAttrs(child: Seq[Attribute]): Seq[Attribute] = {
-    def typeOf(name: String): DataType = child.find(_.name == name).map(_.dataType).getOrElse(
-      throw new IllegalArgumentException(s"anchor pass input lacks column '$name'"))
+    def typeOf(name: String): DataType = NativePass.column(child, name).dataType
     val tsType = typeOf("timestamp")
     Seq(
       AttributeReference("symbol", typeOf("symbol"))(),
@@ -58,26 +57,21 @@ object AnchorEmit {
   * (symbol, chunk) group, reusing the group buffer and the find_peaks flags
   * of the flag mode.
   */
-private[plans] final class AnchorEmitter(in: Seq[Attribute], spec: AnchorEmit,
-                                         outTypes: Seq[DataType]) {
-  private def ord(name: String): Int = {
-    val i = in.indexWhere(_.name == name)
-    require(i >= 0, s"anchor pass input lacks column '$name'")
-    i
-  }
-  private val iSym = ord("symbol")
-  private val iTs = ord("timestamp")
-  private val iHigh = ord("high")
-  private val iLow = ord("low")
-  private val iClose = ord("close")
-  private val iDate = ord("local_date")
-  private val iPrior = ord("prior_rows")
-  private val iCHigh = ord("c_high")
-  private val iCLow = ord("c_low")
+private[plans] final class AnchorEmitter(schema: PassSchema, spec: AnchorEmit,
+                                         appender: Appender) {
+  private val iSym = schema.ordinal("symbol")
+  private val iTs = schema.ordinal("timestamp")
+  private val iHigh = schema.ordinal("high")
+  private val iLow = schema.ordinal("low")
+  private val iClose = schema.ordinal("close")
+  private val iDate = schema.ordinal("local_date")
+  private val iPrior = schema.ordinal("prior_rows")
+  private val iCHigh = schema.ordinal("c_high")
+  private val iCLow = schema.ordinal("c_low")
   private val triggers = AnchorSnapshots.Triggers.map(_._1)
-  private val iHit = triggers.map(t => ord(s"hit_$t")).toArray
-  private val iCHit = triggers.map(t => ord(s"c_$t")).toArray
-  private val iTails = if (spec.withTails) Seq(ord("row_pv"), ord("row_v")) else Nil
+  private val iHit = triggers.map(t => schema.ordinal(s"hit_$t")).toArray
+  private val iCHit = triggers.map(t => schema.ordinal(s"c_$t")).toArray
+  private val iTails = if (spec.withTails) Seq("row_pv", "row_v").map(schema.ordinal) else Nil
 
   // Candidate kinds in emission order: the peak flags in
   // PeaksPass.peakFields order, the triggers, then daily_high, daily_low.
@@ -92,9 +86,6 @@ private[plans] final class AnchorEmitter(in: Seq[Attribute], spec: AnchorEmit,
   private val typeNames = kinds.map(k => UTF8String.fromString(k._1)).toArray
   private val priceOrd = kinds.map(_._2).toArray
   private val priority = kinds.map(k => AnchorSnapshots.typePriority.indexOf(k._1)).toArray
-
-  private val outRow = new GenericInternalRow(outTypes.length)
-  private val project = UnsafeProjection.create(outTypes.toArray)
 
   def emit(rows: ArrayBuffer[InternalRow], flags: Array[Array[Int]]): Iterator[InternalRow] = {
     val n = rows.length
@@ -125,16 +116,16 @@ private[plans] final class AnchorEmitter(in: Seq[Attribute], spec: AnchorEmit,
     picks.iterator.map { case (i, k) =>
       val r = rows(i)
       val base = math.min(r.getLong(iPrior), spec.bufferSize.toLong)
-      outRow.update(0, r.getUTF8String(iSym))
-      outRow.update(1, typeNames(k))
-      outRow.setLong(2, r.getLong(iTs))
-      outRow.setLong(3, i + base)
-      if (r.isNullAt(priceOrd(k))) outRow.setNullAt(4)
-      else outRow.setDouble(4, r.getDouble(priceOrd(k)))
-      outRow.setLong(5, snapTs)
-      outRow.setLong(6, n - 1 + base)
-      tails.zipWithIndex.foreach { case (t, c) => outRow.update(7 + c, t(i)) }
-      project(outRow)
+      val v = appender.values
+      v(0) = r.getUTF8String(iSym)
+      v(1) = typeNames(k)
+      v(2) = r.getLong(iTs)
+      v(3) = i + base
+      v(4) = if (r.isNullAt(priceOrd(k))) null else r.getDouble(priceOrd(k))
+      v(5) = snapTs
+      v(6) = n - 1 + base
+      tails.zipWithIndex.foreach { case (t, c) => v(7 + c) = t(i) }
+      appender(r)
     }
   }
 
@@ -208,7 +199,7 @@ private[plans] final class AnchorEmitter(in: Seq[Attribute], spec: AnchorEmit,
   private def suffixSums(rows: ArrayBuffer[InternalRow], mask: Array[Int], col: Int): Array[Decimal] = {
     val out = new Array[Decimal](rows.length)
     if (rows.forall(_.isNullAt(col))) return out
-    val dt = in(col).dataType.asInstanceOf[DecimalType]
+    val dt = schema.child(col).dataType.asInstanceOf[DecimalType]
     var sum = java.math.BigDecimal.ZERO
     var i = rows.length - 1
     while (i >= 0) {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{CandleAggregator, TickOps}
-import graft.plans.PeaksPassExec
+import graft.plans.{NativePassExec, PassKernel}
 
 /** SURVEY §4's plan sanity checks, encoded: the physical plans the engine
   * relies on at 100 TB must actually be the plans Catalyst produces. These
@@ -331,7 +331,8 @@ class PlanSpec extends SparkSpec {
       case _: BroadcastExchangeExec => Nil
       case _ => n +: n.children.flatMap(frame)
     }
-    assert(p.collect { case e: PeaksPassExec => e }.size == 1, s"one peaks pass:\n$p")
+    assert(p.collect { case e @ NativePassExec(_, _: PassKernel.Peaks, _) => e }.size == 1,
+      s"one peaks pass:\n$p")
     assert(frame(p).count {
       case e: ShuffleExchangeExec => hashKeys(e).contains("chunk")
       case _ => false

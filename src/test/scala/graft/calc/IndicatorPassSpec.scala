@@ -68,4 +68,23 @@ class IndicatorPassSpec extends SparkSpec {
     assert(plan.contains("Exchange hashpartitioning(symbol"))
     assert("Exchange".r.findAllIn(plan).length == 1, s"extra shuffles:\n$plan")
   }
+
+  test("a null symbol is its own group, with the indicators of a named one") {
+    val rnd = new scala.util.Random(11)
+    val candles = (0 until 40).map { i =>
+      val c = 100.0 + rnd.nextGaussian()
+      (new Timestamp(1700000000000L + i * 1000L), c - 0.1, c + 0.3, c - 0.3, c)
+    }
+    val df = (for (sym <- Seq(Some("A"), None); (ts, o, h, l, c) <- candles)
+      yield (sym, ts, o, h, l, c)).toDF("symbol", "timestamp", "open", "high", "low", "close")
+    val cols = (IndicatorPass.indicatorFields ++ IndicatorPass.patternFields).map(f => col(f.name))
+    for (bucket <- Seq(None, Some(IndicatorPass.BucketSpec(bucketSeconds = 10, warmupRows = 3)))) {
+      val out = IndicatorPass.withIndicators(df, patterns = true, bucket = bucket)
+      def series(group: org.apache.spark.sql.Column) =
+        out.filter(group).orderBy("timestamp").select(cols: _*).collect().toSeq
+      val named = series(col("symbol") === "A")
+      assert(named.length == candles.length, s"bucket $bucket")
+      assert(series(col("symbol").isNull) == named, s"bucket $bucket")
+    }
+  }
 }

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.SuffixArray
 
-/** Direct specs for the two order-index native nodes ([[GlobalIndexPlan]],
-  * [[GlobalRankPlan]]): dense/monotone index values on a multi-partition
-  * fixture, run-start rank parity with the DataFrame `groupBy(min)+join`
-  * form, cross-partition run threading (duplicate keys far wider than a
-  * partition), and the one-range-exchange plan shape — the property a
-  * re-sampled-bounds regression or a second exchange would break.
+/** Direct specs for the two order-index native passes
+  * ([[PassKernel.GlobalIndex]], [[PassKernel.GlobalRank]]): dense/monotone
+  * index values on a multi-partition fixture, run-start rank parity with
+  * the DataFrame `groupBy(min)+join` form, cross-partition run threading
+  * (duplicate keys far wider than a partition), and the one-range-exchange
+  * plan shape — the property a re-sampled-bounds regression or a second
+  * exchange would break.
   */
 class GlobalIndexRankSpec extends SparkSpec {
 
@@ -81,8 +82,8 @@ class GlobalIndexRankSpec extends SparkSpec {
     import session.implicits._
     // -0.0 and 0.0 compare EQUAL in the range sort but are binary-unequal
     // in raw UnsafeRow bytes, as are distinct NaN payloads — without the
-    // normalization in GlobalRankExec.keyExprs one logical run would split
-    // into two ranks. Build both via arithmetic so the literals can't be
+    // normalization in PassKernel.GlobalRank.keyExprs one logical run would
+    // split into two ranks. Build both via arithmetic so the literals can't be
     // constant-folded into one representation before reaching the node.
     val altNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
     val df = scala.util.Random.shuffle(
