@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftSession
@@ -17,11 +18,14 @@ import graft.queries.Registry
   */
 object Bench {
 
-  private def materialize(df: DataFrame): Unit = {
+  /** Runs the hash aggregate; returns the QueryExecution that ran it, whose
+    * observed metrics carry the query's algorithm counters. */
+  private def materialize(df: DataFrame): QueryExecution = {
     // bit_xor, not sum: a long sum of hashes overflows under ANSI mode.
     val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
-    df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-    ()
+    val hashed = df.select(h.as("h")).agg(bit_xor(col("h")))
+    hashed.collect()
+    hashed.queryExecution
   }
 
   /** 1-minute load average from /proc/loadavg — recorded in the bench JSON
@@ -139,11 +143,8 @@ object Bench {
     val cpuT0 = osBean.getProcessCpuTime
     val wallT0 = System.nanoTime()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // selectivity evidence for the prefix-filter similarity join, captured
-    // PER RUN: the instrumentation global is shared by every query that
-    // calls exactJaccardPairs (llm_cluster_exact too), so it is reset to -1
-    // right before the prefix join's reps and read right after them — the
-    // emitted field can only come from this run, never a stale/earlier one
+    // selectivity evidence for the prefix-filter similarity join: the
+    // candidate count observed on a prefix-join row's own timed query
     var prefixCand = -1L
     // Per-query gating + self-consistency retry (the r15 sf10 record was
     // contaminated on rows the sweep never touched — the start-only gate
@@ -176,12 +177,15 @@ object Bench {
       // exact-decimal run stays Verify-only oracle parity machinery
       val fn = q.benchRun.getOrElse(q.run)
       val isPrefix = q.name.contains("prefix_join")
-      if (isPrefix) graft.functions.PrefixJoin.lastCandidatePairs = -1L
       def runReps(): Seq[Double] = (1 to reps).map { _ =>
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        try { materialize(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch {
+        try {
+          val qe = materialize(fn(spark, sfDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          if (isPrefix) graft.functions.PrefixJoin.candidatePairs(qe).foreach(prefixCand = _)
+          sec
+        } catch {
           case e: Throwable =>
             System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
             // a -1 row without its reason made a failed sf10 run
@@ -213,14 +217,6 @@ object Bench {
       if (attemptLog.contains(q.name) && times.forall(_ >= 0))
         attemptLog(q.name) = attemptLog(q.name) :+ median(times)
       if (times.forall(_ >= 0) && !settled(times)) noisy += q.name
-      if (isPrefix && times.exists(_ >= 0)) {
-        // the count lands via an async QueryExecutionListener on action
-        // completion — give the listener bus a moment before reading
-        val t0 = System.nanoTime()
-        while (graft.functions.PrefixJoin.lastCandidatePairs < 0 &&
-          (System.nanoTime() - t0) < 5000000000L) Thread.sleep(50)
-        prefixCand = graft.functions.PrefixJoin.lastCandidatePairs
-      }
       val sec =
         if (times.exists(_ < 0)) -1.0
         else median(times)

@@ -1,347 +1,25 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
-import graft.core.{GraftSession, Tables}
-import graft.functions.{MinHash, Similarity}
-
-/** Scratch stage-level profiler (dev tool, not part of the library surface). */
+/** Plan dumper: `graft.Profile explain <row>...` prints each registry row's
+  * formatted physical plan over `SPARK_GRAFT_SF_DIR` (the dumps under
+  * `plans/` come from here). Stage timings come from the executed plan
+  * instead: `graftbench/run.py --trace 1` and `SPARK_GRAFT_BENCH_ONLY`.
+  */
 object Profile {
-
-  private def time(name: String)(f: => Long): Unit = {
-    val t0 = System.nanoTime()
-    val n = f
-    println(f"[profile] $name%-40s ${(System.nanoTime() - t0) / 1e9}%8.3f s  (n=$n)")
-  }
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if (!args.headOption.contains("explain")) {
+      System.err.println("usage: graft.Profile explain <row> [<row> ...]")
+      sys.exit(2)
+    }
     val spark = GraftSession.get()
-    // warmup
-    spark.read.parquet(s"$dir/nation.parquet").count()
-
-    if (args.headOption.contains("explain")) {
-      args.drop(1).foreach { name =>
-        println(s"=== $name")
-        graft.queries.Registry.queries(name)(spark, dir).explain("formatted")
-      }
-      spark.stop(); return
+    args.drop(1).foreach { name =>
+      println(s"=== $name")
+      graft.queries.Registry.queries(name)(spark, dir).explain("formatted")
     }
-    if (args.headOption.contains("sa-round")) {
-      // One prefix-doubling round's PHYSICAL plan in both partner-fetch
-      // forms (the rounds are invisible in the registry row's explain —
-      // every round ends at a localCheckpoint boundary): the size-gated
-      // broadcast join vs the lead(rank, span) window shift.
-      val docs = graft.core.Tables.documents(spark, dir)
-        .filter(col("source").isin("src0", "src1", "src2"))
-      for (budget <- Seq(Long.MaxValue, 0L)) {
-        spark.conf.set(graft.operators.SuffixArray.PartnerBroadcastBytesKey,
-          budget.toString)
-        println(s"=== sa round-1 plan, partner budget=$budget")
-        graft.operators.SuffixArray.explainRound1(docs)
-      }
-      spark.conf.unset(graft.operators.SuffixArray.PartnerBroadcastBytesKey)
-      spark.stop(); return
-    }
-    if (args.headOption.contains("h2")) { profileH2(spark, dir); spark.stop(); return }
-    if (args.headOption.contains("minhash")) { profileMinhash(spark, dir); spark.stop(); return }
-    if (args.headOption.contains("bigram")) { profileBigram(spark, dir); spark.stop(); return }
-    if (args.headOption.contains("sufdup")) { profileSufDup(spark, dir); spark.stop(); return }
-    if (args.headOption.contains("oraclesql")) {
-      val out = java.nio.file.Paths.get("/tmp/oraclesql")
-      java.nio.file.Files.createDirectories(out)
-      Seq(
-        "llm_fingerprints" -> graft.queries.LlmHashOracles.fingerprintsSql,
-        "llm_simhash_neardup" -> graft.queries.LlmHashOracles.simhashSql,
-        "llm_minhash_dedup" -> graft.queries.LlmHashOracles.minhashSql,
-        "llm_ann_recall" -> graft.queries.LlmHashOracles.annSql
-      ).foreach { case (n, sql) =>
-        java.nio.file.Files.writeString(out.resolve(s"$n.sql"), sql)
-      }
-      println(s"[profile] wrote 4 oracle SQLs to $out")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("hashes")) {
-      // ground-truth vectors for scripts/spark_hashes.py's self-check
-      spark.sql(
-        """SELECT xxhash64('') a, xxhash64('a') b, xxhash64('hello world') c,
-          |  xxhash64('abcdefghijklmnopqrst') d,
-          |  xxhash64(CAST(0 AS INT), CAST(0 AS INT)) e,
-          |  xxhash64(CAST(5 AS INT), CAST(63 AS INT)) f,
-          |  xxhash64(CAST(123456789 AS INT), CAST(7 AS INT)) g,
-          |  hash(array(CAST(1 AS BIGINT))) h,
-          |  hash(array(CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(3 AS BIGINT))) i,
-          |  hash(array(CAST(-9223372036854775808 AS BIGINT), CAST(982451653 AS BIGINT))) j,
-          |  xxhash64('spark dedup corpus shingles') k,
-          |  hash(array(CAST(17 AS BIGINT), CAST(2038074742 AS BIGINT), CAST(0 AS BIGINT),
-          |       CAST(55 AS BIGINT), CAST(1 AS BIGINT), CAST(999999999 AS BIGINT),
-          |       CAST(123 AS BIGINT), CAST(456 AS BIGINT))) l
-          |""".stripMargin).show(false)
-      spark.stop(); return
-    }
-
-    // ---- llm_embed_neardup_lsh stages
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001) + lit(0.01)).as("embedding"))
-    val base = e.unionByName(injected).cache()
-    time("base materialize")(base.count())
-
-    val buckets = base.select(col("vec_id"),
-      explode(array((0 until 4).map(t => struct(lit(t).as("table"),
-        Similarity.lshBucket(col("embedding"), 8, seed = t).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.table"), col("tb.bucket"))
-    time("lshBucket expr (4 tables x 8 bits)")(buckets.count())
-    val bucketsCached = buckets.cache()
-    time("buckets cache")(bucketsCached.count())
-
-    val a = bucketsCached.select(col("table"), col("bucket"), col("vec_id").as("id_a"))
-    val b = bucketsCached.select(col("table"), col("bucket"), col("vec_id").as("id_b"))
-    val candidates = a.join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct().cache()
-    time("candidate pairs")(candidates.count())
-
-    val emb = base.select(col("vec_id"), col("embedding"))
-    val dups = candidates
-      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("ea")), "id_a")
-      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("eb")), "id_b")
-      .filter(round(Similarity.cosine(col("ea"), col("eb")), 6) >= 0.99)
-      .select(col("id_b").as("__dup")).distinct()
-    time("exact-cosine verify + distinct")(dups.count())
-
-    // finer splits of the candidate stage
-    val joined = a.join(b, Seq("table", "bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    time("bucket self-join (no distinct)")(joined.count())
-    time("bucket self-join + distinct")(joined.distinct().count())
-
-    spark.catalog.clearCache()
-
-    // the actual registry queries, materialized like Bench does, 4 reps
-    def benchLike(name: String): Unit = {
-      val fn = graft.queries.Registry.queries(name)
-      (1 to 4).foreach { rep =>
-        spark.catalog.clearCache()
-        time(s"QUERY $name rep$rep") {
-          val df = fn(spark, dir)
-          val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
-          df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-          1L
-        }
-      }
-    }
-    benchLike("llm_embed_neardup_lsh")
-    benchLike("llm_minhash_dedup")
-    spark.catalog.clearCache()
-
-    // ---- llm_minhash_dedup stages
-    val docs = Tables.documents(spark, dir)
-    time("docs materialize")(docs.count())
-    val sigs = MinHash.withSignatures(docs).cache()
-    time("signatures kernel")(sigs.count())
-    val pairs = MinHash.candidatePairs(docs).cache()
-    time("candidatePairs (incl resig)")(pairs.count())
-    val survivors = MinHash.dedupFuzzyFromPairs(docs, pairs)
-    time("dedupFuzzyFromPairs")(survivors.count())
-    val verified = MinHash.withExactJaccard(pairs, docs)
-    time("withExactJaccard")(verified.count())
     spark.stop()
-  }
-
-  /** Suffix-dup readout stage split: doubling rounds to span 8, the per-doc
-    * lead window, the class-count window, and (for comparison) the full
-    * 64-cap build the old adjacency readout paid.
-    */
-  private def profileSufDup(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val base = graft.core.Tables.documents(spark, dir)
-      .filter(col("source").isin("src0", "src1", "src2"))
-      .select(col("doc_id"), col("text"))
-    val docs = base.unionByName(
-      base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    time("dupWindowPositions k=10 (new readout, full)")(
-      graft.operators.SuffixArray.dupWindowPositions(docs, k = 10)
-        .agg(count(lit(1))).collect()(0).getLong(0))
-    time("build (full 64-cap SA, old readout's first stage)")(
-      graft.operators.SuffixArray.build(docs)
-        .agg(sum(col("sa_rank"))).collect()(0).getLong(0))
-    (1 to 2).foreach { rep =>
-      time(s"dupWindowPositions k=10 rep$rep")(
-        graft.operators.SuffixArray.dupWindowPositions(docs, k = 10)
-          .agg(count(lit(1))).collect()(0).getLong(0))
-    }
-  }
-
-  /** Bigram-LM stage split (the r17 verdict's task 4: commit a stage
-    * profile of llm_bigram_lm_filter): tokenize, bigram explode, model
-    * build, and the full scored query — each materialized past column
-    * pruning (sums over the produced values, not bare counts).
-    */
-  private def profileBigram(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import graft.queries.QueriesCorpus
-    val d = QueriesCorpus.tokenizedDocs(spark, dir)
-    time("tokenize (normalize+split, sum sizes)")(
-      d.agg(sum(size(col("toks")))).collect()(0).getLong(0))
-    val dc = QueriesCorpus.tokenizedDocs(spark, dir).cache()
-    time("tokenize cache+count")(dc.count())
-    time("bigram explode over cached toks")(
-      dc.select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS w1, element_at(toks, i+1) AS w2))")).as("bg"))
-        .agg(sum(length(col("bg.w1")))).collect()(0).getLong(0))
-    val (uni, big, vocab) = QueriesCorpus.bigramModelFrames(dc)
-    time("model: unigram agg")(uni.count())
-    time("model: bigram agg")(big.count())
-    time("model: vocab")(vocab.collect()(0).getLong(0))
-    time("score vs model (full attach+agg)")(
-      QueriesCorpus.scoreAgainstModel(dc, uni, big, vocab).count())
-    spark.catalog.clearCache()
-    val fn = graft.queries.Registry.queries("llm_bigram_lm_filter")
-    (1 to 2).foreach { rep =>
-      spark.catalog.clearCache()
-      time(s"QUERY llm_bigram_lm_filter rep$rep") {
-        val df = fn(spark, dir)
-        val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
-        df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-        1L
-      }
-    }
-  }
-
-  /** Minhash-only stage split (safe at any SF — no fixed-bucket embed LSH). */
-  private def profileMinhash(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val docs = Tables.documents(spark, dir)
-    time("docs materialize")(docs.count())
-    val sigs = MinHash.withSignatures(docs)
-    time("signatures kernel (no cache)")(sigs.count())
-    val sigc = sigs.cache()
-    time("signatures cache")(sigc.count())
-    val banded = sigc.select(col("id"),
-      explode(MinHash.bands(col("sig"), 16, 8)).as("b"))
-    time("band explode + hash")(banded.count())
-    val a = banded.select(col("b").as("b_a"), col("id").as("id_a"))
-    val bd = banded.select(col("b").as("b_b"), col("id").as("id_b"))
-    val idPairs = a.join(bd, col("b_a") === col("b_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    time("band self-join")(idPairs.count())
-    time("band self-join + distinct")(idPairs.distinct().count())
-    val pairs = MinHash.candidatePairs(docs).cache()
-    time("candidatePairs full (incl est_jaccard)")(pairs.count())
-    time("dedupFuzzyFromPairs")(MinHash.dedupFuzzyFromPairs(docs, pairs).count())
-    time("withExactJaccard")(MinHash.withExactJaccard(pairs, docs).count())
-    spark.catalog.clearCache()
-    val fn = graft.queries.Registry.queries("llm_minhash_dedup")
-    (1 to 3).foreach { rep =>
-      spark.catalog.clearCache()
-      time(s"QUERY llm_minhash_dedup rep$rep") {
-        val df = fn(spark, dir)
-        val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
-        df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-        1L
-      }
-    }
-  }
-
-  /** Stage-level split of the h2 pattern pass: candle agg, explode+sort,
-    * kernel-only, and the full Row-encode path — flat and bucketed.
-    */
-  private def profileH2(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import graft.calc.IndicatorPass
-    import org.apache.spark.sql.{Encoders, Row}
-
-    val mkCandles = () => graft.operators.CandleAggregator.aggregate(
-      graft.core.Tables.ticks(spark, dir))
-    time("candle aggregation (count)")(mkCandles().count())
-
-    val c = mkCandles().cache()
-    time("candles cache+count")(c.count())
-
-    val inSchema = c.schema
-    val iSym = inSchema.fieldIndex("symbol")
-    val iO = inSchema.fieldIndex("open")
-    val iH = inSchema.fieldIndex("high")
-    val iL = inSchema.fieldIndex("low")
-    val iC = inSchema.fieldIndex("close")
-
-    // A: shuffle+sort only, iterate rows, no kernel
-    val sorted = c.repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("timestamp"))
-    time("A sort+iterate (no kernel)")(
-      sorted.mapPartitions { rows =>
-        var n = 0L
-        rows.foreach { r => if (r.getDouble(iC) > -1) n += 1 }
-        Iterator.single(n)
-      }(Encoders.scalaLong).reduce(_ + _))
-
-    // B: + indicator kernel only (no patterns)
-    time("B sort+kernel indicators")(
-      sorted.mapPartitions { rows =>
-        var sym: String = null
-        var st: IndicatorPass.SymbolState = null
-        var n = 0L
-        rows.foreach { r =>
-          val s = r.getString(iSym)
-          if (st == null || s != sym) { sym = s; st = new IndicatorPass.SymbolState() }
-          st.next(r.getDouble(iO), r.getDouble(iH), r.getDouble(iL), r.getDouble(iC))
-          n += 1
-        }
-        Iterator.single(n)
-      }(Encoders.scalaLong).reduce(_ + _))
-
-    // C: + pattern kernel too, still no row building
-    time("C sort+kernel indicators+patterns")(
-      sorted.mapPartitions { rows =>
-        var sym: String = null
-        var st: IndicatorPass.SymbolState = null
-        var n = 0L
-        rows.foreach { r =>
-          val s = r.getString(iSym)
-          if (st == null || s != sym) { sym = s; st = new IndicatorPass.SymbolState(patterns = true) }
-          st.next(r.getDouble(iO), r.getDouble(iH), r.getDouble(iL), r.getDouble(iC))
-          n += 1
-        }
-        Iterator.single(n)
-      }(Encoders.scalaLong).reduce(_ + _))
-
-    // D: full flat pass (Row building + 89-col encoder)
-    time("D full flat withIndicators(patterns)")(
-      IndicatorPass.withIndicators(c, patterns = true).count())
-
-    // E: full bucketed pass (the bench variant's spec)
-    time("E full bucketed (bench spec wr=64 bf=16)")(
-      IndicatorPass.withIndicators(c, patterns = true,
-        bucket = Some(IndicatorPass.autoBucket(c, warmupRows = 64, bucketFactor = 16))).count())
-
-    // G: full flat pass, materialize EVERY column through the encoder
-    val flatOut = IndicatorPass.withIndicators(c, patterns = true)
-    time("G flat + hash ALL columns (encoder real)") {
-      val h = xxhash64(flatOut.columns.map(cn => col(s"`$cn`")): _*)
-      flatOut.select(h.as("h")).agg(bit_xor(col("h"))).collect(); 1L
-    }
-
-    // H: bucketed bench-spec pass + the h2 select (tsMicros) + hash
-    val bOut = IndicatorPass.withIndicators(c, patterns = true,
-      bucket = Some(IndicatorPass.autoBucket(c, warmupRows = 64, bucketFactor = 16)))
-    time("H bucketed + tsMicros select + hash") {
-      val sel = bOut.select((col("symbol") +:
-        graft.queries.Det.tsMicros(col("timestamp")).as("ts") +:
-        IndicatorPass.patternFields.map(f => col(f.name))): _*)
-      val h = xxhash64(sel.columns.map(cn => col(s"`$cn`")): _*)
-      sel.select(h.as("h")).agg(bit_xor(col("h"))).collect(); 1L
-    }
-
-    (1 to 2).foreach { rep =>
-      time(s"F h2_patterns benchRun rep$rep") {
-        spark.catalog.clearCache()
-        val q = graft.queries.Registry.all.find(_.name == "h2_patterns").get
-        val df = q.benchRun.getOrElse(q.run)(spark, dir)
-        val h = xxhash64(df.columns.map(cn => col(s"`$cn`")): _*)
-        df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-        1L
-      }
-    }
   }
 }

@@ -43,9 +43,10 @@ object GraftSession {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": session-conf overrides for A/B
-    // experiment runs (e.g. spark.graft.dbscan.lsh.bits=16 to re-profile
-    // an LSH geometry) without touching code. Session-level confs only —
-    // core confs are already fixed by the builder above.
+    // experiment runs (e.g. spark.graft.exactJaccard.broadcastMaxBytes=0 to
+    // time the prefix join's shuffled verify) without touching code.
+    // Session-level confs only — core confs are already fixed by the
+    // builder above.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
       kvs.split(';').filter(_.contains('=')).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

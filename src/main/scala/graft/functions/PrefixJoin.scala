@@ -44,15 +44,22 @@ import org.apache.spark.sql.functions._
   */
 object PrefixJoin {
 
-  /** Bench instrumentation: candidate-pair count of the most recent
-    * [[exactJaccardPairs]] call (the quantity the prefix filter exists to
-    * bound — recorded alongside sf10 wall time so the selectivity claim in
-    * the scaladoc is measured, not asserted). Not part of query semantics.
-    * Bench resets this to -1 before timing the prefix join so the emitted
-    * field is unambiguously from that run (several queries share
-    * [[exactJaccardPairs]]).
+  /** Name prefix of the observation each [[exactJaccardPairs]] call puts on
+    * its candidate frame (suffixed per call: one query may hold several). */
+  private val CandidatesObservation = "prefix_cand_"
+
+  /** Candidate pairs (pre-verify, the quantity the prefix filter exists to
+    * bound) counted by the prefix joins inside an executed query, read
+    * from that query's own observed metrics — pass the QueryExecution of
+    * the action that ran, e.g. `df.queryExecution` after `df.collect()`.
+    * None when the query held no prefix join or has not run.
     */
-  @volatile var lastCandidatePairs: Long = -1L
+  def candidatePairs(qe: org.apache.spark.sql.execution.QueryExecution): Option[Long] = {
+    val counts = qe.observedMetrics.collect {
+      case (name, row) if name.startsWith(CandidatesObservation) => row.getLong(0)
+    }
+    if (counts.isEmpty) None else Some(counts.sum)
+  }
 
   /** Verify-strategy config: byte budget for broadcasting the corpus
     * shingle-set frame in the exact-Jaccard verify stage
@@ -73,9 +80,9 @@ object PrefixJoin {
 
   /** Bookkeeping for the most recent call whose plan was never executed:
     * its listener (and token cache) would otherwise linger for the session
-    * lifetime. Last-call-wins, matching [[lastCandidatePairs]] semantics —
-    * registering a new call evicts (unregisters + unpersists) the previous
-    * pending one, so at most ONE unexecuted call's resources survive.
+    * lifetime. Last-call-wins: registering a new call evicts (unregisters +
+    * unpersists) the previous pending one, so at most ONE unexecuted call's
+    * resources survive.
     */
   private val pending = new java.util.concurrent.atomic.AtomicReference[
     (org.apache.spark.sql.util.QueryExecutionListener,
@@ -210,16 +217,17 @@ object PrefixJoin {
     // corpora candidates are inherently dense and banded-LSH MinHash is
     // the right tool; this operator pays that price for COMPLETENESS at
     // the threshold.
-    val obsName = s"prefix_cand_${System.nanoTime}"
+    val obsName = s"$CandidatesObservation${System.nanoTime}"
     val observed = cand.observe(obsName, count(lit(1)).as("n"))
-    // Deferred bookkeeping, keyed to the FIRST action over the result: a
-    // QueryExecutionListener (not a parked thread — the old daemon thread
-    // leaked one parked thread per never-executed plan) records the
-    // candidate count and releases the token cache, then unregisters
-    // itself. SINGLE-ACTION CONTRACT: the cache exists for the one action
-    // that materializes the result — a second action over the same
-    // DataFrame recomputes the token pipeline uncached (correct, just
-    // slower); callers wanting multiple actions should persist the RESULT.
+    // The count lands in the executing query's own observedMetrics (read it
+    // with [[candidatePairs]]). Deferred bookkeeping, keyed to the FIRST
+    // action over the result: a QueryExecutionListener (not a parked thread
+    // — the old daemon thread leaked one parked thread per never-executed
+    // plan) releases the token cache, then unregisters itself.
+    // SINGLE-ACTION CONTRACT: the cache exists for the one action that
+    // materializes the result — a second action over the same DataFrame
+    // recomputes the token pipeline uncached (correct, just slower);
+    // callers wanting multiple actions should persist the RESULT.
     // If the plan is never executed, the listener (and cache) stay until
     // the NEXT exactJaccardPairs call evicts them (see [[pending]]).
     val session = docs.sparkSession
@@ -232,13 +240,6 @@ object PrefixJoin {
           }.isDefined
       private def finish(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
         if (mine(qe)) {
-          qe.observedMetrics.get(obsName).foreach { row =>
-            lastCandidatePairs = row.getAs[Any]("n") match {
-              case v: Long => v
-              case v: java.lang.Number => v.longValue()
-              case _ => -1L
-            }
-          }
           tok.unpersist()
           pending.compareAndSet((this, session, tok), null)
           session.listenerManager.unregister(this)

@@ -284,10 +284,10 @@ object Similarity {
       lshCandidatePairsDeduped(vectors, bits, tables, checkpointDir), threshold)
 
   /** Distinct 16-B candidate id pairs from a bucketed (table, bucket,
-    * vec_id) frame — the self-join stage of [[nearDupPairsLsh]], exposed
-    * for stage-level profiling ([[graft.tools.ProfileDbscan]]) and as the
-    * fallback when the bucket-vector frame outgrows its broadcast budget
-    * (see [[lshCandidatePairsDeduped]]).
+    * vec_id) frame — the self-join stage of [[nearDupPairsLsh]], used as
+    * the fallback when the bucket-vector frame outgrows its broadcast
+    * budget (see [[lshCandidatePairsDeduped]]) and as DbscanSpec's
+    * reference candidate set.
     */
   private[graft] def lshCandidatePairs(bucketed: DataFrame): DataFrame = {
     val a = bucketed.select(col("table"), col("bucket"), col("vec_id").as("id_a"))

@@ -117,8 +117,8 @@ object SubstringDedup {
   }
 
   /** (id, toks) per document with ≥ k tokens — the map-side tokenization
-    * every stage shares. Package-private for the sf10 stage profiler
-    * ([[graft.tools.ProfileSubstring]]), not query API.
+    * every stage shares. Package-private for SubstringDedupSpec, not query
+    * API.
     */
   private[graft] def tokenized(docs: DataFrame, k: Int, textCol: String,
                                idCol: String): DataFrame =

@@ -65,62 +65,38 @@ object ConnectedComponents {
     * frame distributed; swap in `checkpoint` (reliable storage) for runs
     * where losing an executor mid-iteration must be recoverable.
     */
-  /** Star-rounds taken by the most recent [[components]] call on this JVM —
-    * a measurement hook for the scale bench (rounds-to-fixpoint is THE
-    * scaling number for CC: work is rounds × edge shuffles, and
-    * Kiveris-style alternation converges in O(log² n) rounds). Not part of
-    * any query result.
-    */
-  @volatile var lastRounds: Int = -1
+  def components(edges: DataFrame, maxIters: Int = 50): DataFrame =
+    componentsWithRounds(edges, maxIters)._1
 
-  /** How many fingerprints the most recent [[components]] call read from the
-    * observe() channel vs the explicit-aggregate fallback — measurement hook
-    * pairing with [[lastRounds]]; the r17 fusion only saves its pass when
-    * the observe channel actually fires on the checkpoint action.
+  /** [[components]] plus the star-rounds it took to reach the fixpoint —
+    * the scaling number for CC (work is rounds × edge shuffles, and
+    * Kiveris-style alternation converges in O(log² n) rounds). Returned
+    * per call, so concurrent calls in one session each see their own.
     */
-  @volatile var lastObservedFingerprints: Int = 0
-  @volatile var lastFallbackFingerprints: Int = 0
-
-  def components(edges: DataFrame, maxIters: Int = 50): DataFrame = {
+  private[graft] def componentsWithRounds(edges: DataFrame,
+                                          maxIters: Int = 50): (DataFrame, Int) = {
     // (count, Σa, Σb) fingerprint with ZERO extra actions per round (r17):
     // the metrics ride the round's own checkpoint materialization as an
     // `observe()` node, read back from queryExecution.observedMetrics after
-    // the eager localCheckpoint — the former separate stats job re-scanned
-    // every round's edge frame once more (one full extra pass per round at
-    // any scale). Star ops only ever lower partner ids, so an unchanged
-    // fingerprint is a near-certain fixpoint — confirmed by ONE exact
-    // set-difference check at that point (not per round, the r8 cost).
-    // Decimal sums: ANSI mode would throw on a long-sum overflow at extreme
-    // id ranges. Fallback: if a Spark version ever stops populating
-    // observedMetrics on the checkpoint action, the explicit aggregate runs
-    // instead — correctness never hangs on the metrics channel.
-    def statsJob(df: DataFrame): (Long, BigDecimal, BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(col("a").cast("decimal(38,0)")), sum(col("b").cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)),
-        if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))
-    }
-    // returns (checkpointed frame, fingerprint) in one materialization
+    // the eager localCheckpoint. Star ops only ever lower partner ids, so an
+    // unchanged fingerprint is a near-certain fixpoint — confirmed by ONE
+    // exact set-difference check at that point (not per round, the r8
+    // cost). Decimal sums: ANSI mode would throw on a long-sum overflow at
+    // extreme id ranges. A Spark version that stops populating
+    // observedMetrics on the checkpoint action fails loudly here rather than
+    // paying a silent second pass per round.
     def checkpointWithStats(df: DataFrame): (DataFrame, (Long, BigDecimal, BigDecimal)) = {
       val observed = df.observe("cc_fingerprint", count(lit(1)).as("n"),
         sum(col("a").cast("decimal(38,0)")).as("sa"),
         sum(col("b").cast("decimal(38,0)")).as("sb"))
       val ck = observed.localCheckpoint(true)
-      val fp = observed.queryExecution.observedMetrics.get("cc_fingerprint") match {
-        case Some(r) =>
-          lastObservedFingerprints += 1
-          (r.getLong(0),
-            if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)),
-            if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))
-        case None =>
-          lastFallbackFingerprints += 1
-          statsJob(ck)
-      }
-      (ck, fp)
+      val r = observed.queryExecution.observedMetrics.getOrElse("cc_fingerprint",
+        throw new IllegalStateException(
+          "observe channel cc_fingerprint missing after the checkpoint action"))
+      (ck, (r.getLong(0),
+        if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)),
+        if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2))))
     }
-    lastObservedFingerprints = 0
-    lastFallbackFingerprints = 0
     var (cur, n) = checkpointWithStats(canon(edges))
     var converged = false
     var it = 0
@@ -131,10 +107,10 @@ object ConnectedComponents {
       n = m
       it += 1
     }
-    lastRounds = it
     // at the fixpoint every edge is (member, root); roots map to themselves
-    cur.select(col("a").as("id"), col("b").as("component"))
+    val assigned = cur.select(col("a").as("id"), col("b").as("component"))
       .union(cur.select(col("b").as("id"), col("b").as("component")))
       .distinct()
+    (assigned, it)
   }
 }

@@ -162,7 +162,7 @@ object SuffixArray {
     * comment in [[rankedToSpan]]); `passengers` ride along unchanged. */
   private def partnerFetch(ranked: DataFrame, span: Int,
                            shiftByWindow: Boolean,
-                           passengers: Seq[String] = Nil): DataFrame = {
+                           passengers: Seq[String]): DataFrame = {
     val carried = passengers.map(col)
     if (shiftByWindow) {
       val byDocPos = org.apache.spark.sql.expressions.Window
@@ -176,27 +176,6 @@ object SuffixArray {
         .select((Seq(col("doc_id"), col("pos"), col("rank"),
           coalesce(col("rank2"), lit(-1L)).as("rank2")) ++ carried): _*)
     }
-  }
-
-  /** Plan-evidence hook (graft.Profile `sa-round`): explain round 1's
-    * partner-fetch + re-rank under the session's current partner budget —
-    * the per-round plan is invisible in [[build]]'s final explain because
-    * every round ends at a localCheckpoint boundary.
-    */
-  private[graft] def explainRound1(docs: DataFrame, textCol: String = "text",
-                                   idCol: String = "doc_id"): Unit = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        posexplode(split(graft.functions.TextOps.normalized(col(textCol)), " ")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("tok"))
-    val ranked = rankBy(toks, Seq("tok"))
-      .select(col("doc_id"), col("pos"), col("__rank").as("rank"))
-      .localCheckpoint(true)
-    val maxBroadcast = docs.sparkSession.conf
-      .getOption(PartnerBroadcastBytesKey).map(_.toLong)
-      .getOrElse(PartnerBroadcastBytesDefault)
-    val shiftByWindow = ranked.count() * 24L > maxBroadcast
-    rankBy(partnerFetch(ranked, 1, shiftByWindow), Seq("rank", "rank2"))
-      .explain("formatted")
   }
 
   /** Duplicated fixed-width window positions — the operational dedup output

@@ -747,7 +747,7 @@ object QueriesLlm {
   /** The injected hub-spoke corpus shared by both DBSCAN rows (exact and
     * LSH-bucketed ε-graph): returns (vec_id, embedding double[]).
     */
-  private[graft] def dbscanBase(s: SparkSession, dir: String): DataFrame = {
+  private def dbscanBase(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
     requireIdHeadroom(e, "vec_id", 100000L)
@@ -779,7 +779,7 @@ object QueriesLlm {
   /** The (cluster_rep, n_core, n_border, n_members, sum_members) rollup +
     * cluster_rep = −1 noise row shared by both DBSCAN rows.
     */
-  private[graft] def dbscanRollup(base: DataFrame, members: DataFrame): DataFrame = {
+  private def dbscanRollup(base: DataFrame, members: DataFrame): DataFrame = {
     val clusters = members.groupBy(col("cluster").as("cluster_rep"))
       .agg(sum(col("is_core").cast("long")).as("n_core"),
         sum((!col("is_core")).cast("long")).as("n_border"),
@@ -804,8 +804,8 @@ object QueriesLlm {
     * from the corpus row count and tables from the measured equal-recall
     * exponent instead of a hardcoded point.
     *
-    * Arithmetic (constants MEASURED in the r16 sf10 profile,
-    * `scripts/profile_dbscan_geometry.sh`):
+    * Arithmetic (constants MEASURED in the r16 sf10 geometry profile,
+    * tabled in SURVEY.md):
     *  - per-hyperplane grazing-edge agreement p = 0.866 at ε = 0.9
     *    (θ ≈ 0.42 rad);
     *  - equal-recall miss exponent E = tables × p^bits held at 11.38 —
@@ -827,9 +827,7 @@ object QueriesLlm {
     * All measured geometries verified the IDENTICAL 52,988 ε-edges at
     * sf10 — recall parity measured, not assumed; with fixed hyperplane
     * seeds the outcome is DETERMINISTIC per corpus, and green at each
-    * tested SF means zero edges were missed there. Session confs
-    * `spark.graft.dbscan.lsh.bits` / `.tables` override the choice for
-    * re-profiling.
+    * tested SF means zero edges were missed there.
     */
   private[graft] def dbscanLshGeometry(n: Long): (Int, Int) = {
     val p = 0.866
@@ -850,11 +848,7 @@ object QueriesLlm {
     */
   private def dbscanClustersLsh(s: SparkSession, dir: String): DataFrame = {
     val base = dbscanBase(s, dir)
-    val (autoBits, autoTables) = dbscanLshGeometry(base.count())
-    val bits = s.conf.getOption("spark.graft.dbscan.lsh.bits")
-      .map(_.toInt).getOrElse(autoBits)
-    val tables = s.conf.getOption("spark.graft.dbscan.lsh.tables")
-      .map(_.toInt).getOrElse(autoTables)
+    val (bits, tables) = dbscanLshGeometry(base.count())
     val pairs = Similarity.nearDupPairsLsh(base, threshold = 0.9,
       bits = bits, tables = tables)
     dbscanRollup(base, graft.functions.Dbscan.cluster(pairs, minPts = 6))
@@ -1460,7 +1454,7 @@ object QueriesLlm {
     * — via [[OracleHash]], so the candidate SET (not an idealized all-pairs
     * stand-in) is what the gate hash-checks.
     */
-  private[graft] def incrementalFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def incrementalFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, dir)
     requireIdHeadroom(docs, "doc_id", 2000000L)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -1481,7 +1475,7 @@ object QueriesLlm {
     * admission re-scans the corpus for NEITHER leg) — the stages the two
     * variants build differently.
     */
-  private[graft] def incrementalClassify(batch: DataFrame, corpus: DataFrame,
+  private def incrementalClassify(batch: DataFrame, corpus: DataFrame,
                                   cand: DataFrame,
                                   fpIndex: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -102,8 +102,8 @@ class PrefixJoinSpec extends SparkSpec {
     // count is zero — another suite sharing the session may legitimately
     // hold caches, and the global assert flaked on that.
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    PrefixJoin.lastCandidatePairs = -1L
-    PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8).collect()
+    val result = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
+    result.collect()
     // the query-execution listener unpersists tok once the action completes
     // (async on the listener bus); poll briefly for the release
     val deadline = System.nanoTime() + 10L * 1000000000L
@@ -114,8 +114,8 @@ class PrefixJoinSpec extends SparkSpec {
     }
     assert(mine.isEmpty,
       s"expected this call's persistent RDDs released after the action, still cached: $mine")
-    // and the instrumentation observed a real candidate count from THIS run
-    assert(PrefixJoin.lastCandidatePairs >= 1L)
+    // and the action's own observed metrics carry a real candidate count
+    assert(PrefixJoin.candidatePairs(result.queryExecution).exists(_ >= 1L))
   }
 
   test("a never-executed call's token cache is evicted by the next call") {
@@ -174,6 +174,48 @@ class PrefixJoinSpec extends SparkSpec {
     assert(finalSection.contains("isFinalPlan=true"), s"plan not final:\n$planStr")
     assert(finalSection.contains("ReusedExchange"),
       s"expected the set-frame broadcast to be reused, final plan:\n$finalSection")
+  }
+
+  test("all-duplicate corpus: every pair comes back at Jaccard 1.0") {
+    val docs = (1L to 5L).map(_ -> "the same five words here")
+    val got = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
+      .as[(Long, Long, Double)].collect().toSet
+    val want = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b, 1.0)
+    assert(got === want.toSet)
+  }
+
+  test("concurrent calls in one session: brute-force pairs, own candidate counts") {
+    // cache release is not asserted: a concurrent call evicts the other
+    // call's pending token cache by design ([[PrefixJoin]]'s `pending`).
+    // Each corpus plants near-duplicates (one appended word) so it has
+    // candidates: with none, AQE prunes the observed subtree as empty.
+    val corpora = Seq(0 -> 3, 1 -> 6).map { case (seed, planted) =>
+      val rnd = new scala.util.Random(seed)
+      val vocab = (0 until 10).map(i => s"t$i")
+      val docs = (0 until 20).map { id =>
+        (id.toLong, Seq.fill(6 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      }
+      docs ++ docs.take(planted).map { case (id, text) => (id + 100L, s"$text extra") }
+    }
+    def run(docs: Seq[(Long, String)]): (Set[(Long, Long)], Option[Long]) = {
+      val pairs = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
+        .select(col("id_a"), col("id_b")).as[(Long, Long)]
+      val got = pairs.collect().toSet
+      (got, PrefixJoin.candidatePairs(pairs.queryExecution))
+    }
+    val alone = corpora.map(run)
+    assert(alone.map(_._2).distinct.size == 2, s"candidate counts must differ: $alone")
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = corpora.map(docs => pool.submit(() => { start.await(); run(docs) }))
+      runs.zip(corpora).zip(alone).foreach { case ((future, docs), (_, aloneCount)) =>
+        val (got, candidates) = future.get(120, java.util.concurrent.TimeUnit.SECONDS)
+        assert(got === bruteForce(docs, 0.8))
+        assert(candidates.exists(_ >= got.size.max(1)), s"candidates $candidates")
+        assert(candidates === aloneCount, "the concurrent call reads its own count")
+      }
+    } finally pool.shutdownNow()
   }
 
   test("verified jaccard values match brute force at 6 dp") {

@@ -27,11 +27,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     nodes.map(v => v -> find(v)).toMap
   }
 
-  private def check(edges: Seq[(Long, Long)], label: String): Unit = {
-    val got = ConnectedComponents.components(edges.toDF("a", "b"))
-      .as[(Long, Long)].collect().toMap
+  /** Asserts the components equal a local union-find; returns the rounds. */
+  private def check(edges: Seq[(Long, Long)], label: String): Int = {
+    val (out, rounds) = ConnectedComponents.componentsWithRounds(edges.toDF("a", "b"))
+    val got = out.as[(Long, Long)].collect().toMap
     val want = localComponents(edges)
     assert(got == want, s"$label: $got vs $want")
+    rounds
   }
 
   test("long path converges to one min-rooted component") {
@@ -41,11 +43,10 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("rounds-to-fixpoint on the worst-case path is logarithmic, not linear") {
     // A 256-node path is the adversarial shape for star contraction: naive
     // min-propagation needs n rounds; large-star/small-star alternation is
-    // O(log² n). The bound here (≤ 16 ≈ 2·log₂ 256) is what makes
-    // cc_bench.json's `cc_rounds` meaningful at 100 TB — rounds, not
-    // edges, govern the shuffle count.
-    check((0L until 255L).map(i => (i, i + 1)), "path256")
-    val r = ConnectedComponents.lastRounds
+    // O(log² n). The bound here (≤ 16 ≈ 2·log₂ 256) is what makes the
+    // round count meaningful at 100 TB — rounds, not edges, govern the
+    // shuffle count.
+    val r = check((0L until 255L).map(i => (i, i + 1)), "path256")
     assert(r >= 2 && r <= 16, s"path256 converged in $r rounds — expected O(log n)")
   }
 
@@ -72,13 +73,38 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("fingerprints ride the checkpoint's observe channel, not extra jobs") {
     // the r17 fusion only saves its per-round pass when observedMetrics is
-    // populated by the eager localCheckpoint action — pin that it fires on
-    // every round (fallback count 0) so a Spark upgrade that breaks the
-    // channel is caught here, not as a silent bench regression
+    // populated by the eager localCheckpoint action; components throws when
+    // a round's cc_fingerprint is missing, so a Spark upgrade that breaks
+    // the channel fails this multi-round run instead of a silent slowdown
     check((0L until 63L).map(i => (i, i + 1)), "path-observed")
-    assert(ConnectedComponents.lastObservedFingerprints >= 2,
-      s"observed=${ConnectedComponents.lastObservedFingerprints}")
-    assert(ConnectedComponents.lastFallbackFingerprints == 0,
-      s"fallback=${ConnectedComponents.lastFallbackFingerprints} — observe channel dead")
+  }
+
+  test("degenerate edge lists: empty frame, all-duplicate edges") {
+    // empty inputs still carry the observation (the observe node is the
+    // checkpointed root, so AQE's empty-relation pruning keeps it), both
+    // a literal empty frame and one only known empty after a join runs
+    assert(check(Seq.empty, "empty") >= 1)
+    val emptyAtRuntime = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
+      .join(Seq(7L).toDF("a"), "a").select("a", "b")
+    val (out, rounds) = ConnectedComponents.componentsWithRounds(emptyAtRuntime)
+    assert(out.count() == 0 && rounds >= 1)
+    check(Seq.fill(25)((9L, 4L)), "all-dup")
+  }
+
+  test("concurrent calls in one session: own components, own round counts") {
+    val path = (0L until 127L).map(i => (i, i + 1))
+    val pair = Seq((1000L, 1001L), (1001L, 1000L))
+    val (pathRounds, pairRounds) = (check(path, "path"), check(pair, "pair"))
+    assert(pathRounds != pairRounds, "the two graphs must converge in different rounds")
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = Seq(path -> "path-concurrent", pair -> "pair-concurrent").map {
+        case (edges, label) =>
+          pool.submit(() => { start.await(); check(edges, label) })
+      }
+      assert(runs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) ==
+        Seq(pathRounds, pairRounds))
+    } finally pool.shutdownNow()
   }
 }
