@@ -105,9 +105,10 @@ object Bench {
     // Median of `reps` runs per query: single-run times carry ±0.3 s of JVM
     // noise, which last round manufactured two phantom regressions. The
     // cache is cleared between reps — Spark keys cached data on the
-    // canonicalized plan, so rep 2 of a query with an internal .cache()
-    // boundary would otherwise reuse rep 1's materialization and report a
-    // fantasy time.
+    // canonicalized plan, so rep 2 of a registry row with a lazy .cache()
+    // (the shared candle frames) would otherwise reuse rep 1's
+    // materialization and report a fantasy time. Library calls cache
+    // nothing: their eager stages are localCheckpoints, rebuilt per call.
     // SPARK_GRAFT_BENCH_ONLY=a,b,c: spot-bench subset (sf10 scale runs).
     // An explicit list selects from the FULL registry — a spot-bench may
     // name a non-headline query (llm_dup_clusters); the default run stays

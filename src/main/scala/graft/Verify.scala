@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
   * (scripts/check_correctness.py). A row that throws
   * does not stop the dump: every other row is still written, the failures
   * go to failures.json beside oracle_sql.json (`{}` when there are none),
-  * and the process exits 1. */
+  * and the process exits 1. timings.json beside them holds each dumped
+  * row's wall seconds, slowest first. */
 object Verify {
   type Query = (SparkSession, String) => DataFrame
 
@@ -26,7 +27,8 @@ object Verify {
   }
 
   /** Writes each query (those named in `only`, if given) to
-    * `outDir/<name>`, then oracle_sql.json and failures.json. Returns the
+    * `outDir/<name>`, then oracle_sql.json, failures.json and timings.json
+    * (seconds per row, failed rows included). Returns the
     * failed rows with their error messages; a name in `only` that is not a
     * query counts as failed.
     */
@@ -35,9 +37,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val unknown = only.getOrElse(Set.empty).toSeq.sorted
       .filterNot(queries.contains).map(_ -> "not a registry row")
+    val timings = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     val failed = queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
+        val t0 = System.nanoTime()
         val failure =
           try {
             fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
@@ -46,11 +50,14 @@ object Verify {
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
             Some(name -> String.valueOf(e.getMessage))
           }
-        // the parquet write fully materialized this query; any internal
-        // .cache() is dead weight from here on. Released per query so the
-        // 150-query dump never accumulates pinned storage (at sf1 the
-        // candle/signature caches are tens of MB EACH) — same per-query
-        // hygiene Bench gets from its per-rep clearCache.
+        timings += name -> (System.nanoTime() - t0) / 1e9
+        // the parquet write fully materialized this query; a registry row's
+        // lazy .cache() (the shared candle frames) is dead weight from here
+        // on. Released per query so the 150-query dump never accumulates
+        // pinned storage (at sf1 the candle caches are tens of MB EACH) —
+        // same per-query hygiene Bench gets from its per-rep clearCache.
+        // Library calls keep no cache: their eager stages are
+        // localCheckpoints, freed once the result is unreachable.
         spark.catalog.clearCache()
         failure
       }
@@ -60,6 +67,8 @@ object Verify {
     val failures = unknown ++ failed
     Files.writeString(Paths.get(s"$outDir/failures.json"),
       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/timings.json"),
+      timings.sortBy(-_._2).map { case (k, v) => s"${q(k)}: ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}" }.mkString("{", ",", "}"))
     failures
   }
 

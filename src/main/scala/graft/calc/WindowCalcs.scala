@@ -216,36 +216,12 @@ object WindowCalcs {
   def fewSymbolSkew(probe: DataFrame, threshold: Long = 150000L): Boolean =
     maxRowsPerSymbol(probe) > threshold
 
-  /** Session-scoped statistics cache for the skew probe, keyed by the
-    * probe's canonicalized logical plan: the same (source, projection)
-    * probed twice costs one scan, like a catalog column statistic. The
-    * result is a plan-choice input ONLY — both window paths are
-    * bit-identical — so a stale entry (data replaced on disk mid-session)
-    * can cost performance, never correctness; `Catalog.refreshTable`-style
-    * invalidation is simply a new JVM/session here.
-    */
-  private val skewStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
-
-  /** Test hooks (WindowProbeCacheSpec): membership by the probe's own key —
-    * robust to suites running concurrently — plus a cache clear.
-    */
-  private[calc] def skewStatsCached(probe: DataFrame): Boolean =
-    skewStatsCache.containsKey(probe.queryExecution.analyzed.canonicalized)
-  private[calc] def skewStatsCacheClear(): Unit = skewStatsCache.clear()
-
-  /** Keyed on the canonicalized analyzed plan ITSELF (structural equality),
-    * not its 32-bit semanticHash — a hash collision between two different
-    * probes would silently reuse the wrong statistic (wrong window path;
-    * still bit-identical results, but the Int keyspace makes that plausible
-    * over a long session).
+  /** One probe job per call: the result only picks a plan (both window
+    * paths are bit-identical), so no statistic is kept between calls.
     */
   private def maxRowsPerSymbol(probe: DataFrame): Long =
-    skewStatsCache.computeIfAbsent(
-      probe.queryExecution.analyzed.canonicalized,
-      _ => probe.groupBy("symbol").count()
-        .agg(coalesce(max("count"), lit(0L))).head().getLong(0))
+    probe.groupBy("symbol").count()
+      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
 
   /** W1 with runtime path selection (see [[fewSymbolSkew]]). */
   def withVolumeSpikesAuto(df: DataFrame, window: Int = 60, mult: Double = 1.5,

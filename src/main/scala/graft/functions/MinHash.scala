@@ -271,8 +271,13 @@ object MinHash {
     */
   def bandKeys(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                numPerms: Int = 128, numBands: Int = 16, rowsPerBand: Int = 8): DataFrame =
-    withSignatures(docs, textCol, idCol, numPerms)
-      .select(col("id"), explode(bands(col("sig"), numBands, rowsPerBand)).as("b"))
+    bandFrame(withSignatures(docs, textCol, idCol, numPerms), numBands, rowsPerBand)
+
+  /** `(id, bk)` rows of an `(id, sig)` frame: the band explode with the
+    * packed long key.
+    */
+  private def bandFrame(sigd: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
+    sigd.select(col("id"), explode(bands(col("sig"), numBands, rowsPerBand)).as("b"))
       .select(col("id"),
         (shiftleft(col("b.band").cast("long"), 32) bitwiseOR
           (col("b.band_hash").cast("long") bitwiseAND lit(0xFFFFFFFFL))).as("bk"))
@@ -282,35 +287,28 @@ object MinHash {
     * bucket + one on the scalar pair key for distinct; signatures join back
     * after the distinct.
     *
-    * NOT lazy: constructing the result materializes the signature frame
-    * eagerly (cache + count, or a parquet checkpoint when `checkpointDir`
-    * is set) so the band explode and both re-attach sides can't race to
-    * compute the same cache block; the cache stays pinned until LRU
-    * eviction.
+    * Materialization contract (shared by every graft call that cuts a plan
+    * mid-way — [[crossCandidatePairs]], [[Similarity]]'s LSH and semantic
+    * paths, [[PrefixJoin.exactJaccardPairs]], [[Dbscan.cluster]],
+    * [[graft.operators.ConnectedComponents]]): an intermediate frame that
+    * several subtrees of one downstream action consume is computed ONCE,
+    * eagerly, while the result is built, by `localCheckpoint(true)`. The
+    * blocks live exactly as long as the result that reads them — the
+    * ContextCleaner frees them once it is unreachable — so a second action
+    * over the result reuses them and no call leaves a cache behind. A block
+    * lost with its executor fails the job instead of being recomputed; on
+    * the `local[*]` [[graft.core.GraftSession]] that cannot happen. A caller
+    * that needs reliable storage checkpoints the inputs or the result with
+    * Spark's own `Dataset.checkpoint()`.
     */
   def candidatePairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-                     numPerms: Int = 128, numBands: Int = 16, rowsPerBand: Int = 8,
-                     checkpointDir: Option[String] = None): DataFrame = {
+                     numPerms: Int = 128, numBands: Int = 16, rowsPerBand: Int = 8): DataFrame = {
     // The signature materialization boundary is load-bearing: the signature
     // frame is consumed three times (band explode + both sides of the
     // re-attach), and without a boundary the projection collapse would
-    // re-run the text kernel per consumer. Default = JVM cache (harness
-    // scale); `checkpointDir` = write-to-parquet + re-read, the 100 TB path
-    // where the signature set outgrows executor storage memory — nothing is
-    // then pinned in cache at all.
-    val sigRaw = withSignatures(docs, textCol, idCol, numPerms)
-    val sigd = checkpointDir match {
-      case Some(dir) =>
-        sigRaw.write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      case None =>
-        // eager, not lazy: three subtrees of one downstream action consume
-        // this frame (band explode + both re-attach sides); a lazy cache
-        // lets them race and re-run the text kernel concurrently
-        val cached = sigRaw.cache()
-        cached.count()
-        cached
-    }
+    // re-run the text kernel per consumer; eager, so the three subtrees of
+    // the one downstream action cannot race to compute it concurrently.
+    val sigd = withSignatures(docs, textCol, idCol, numPerms).localCheckpoint(true)
     // (band, bandHash) packed into ONE long — band in the high 32 bits,
     // the murmur3 band hash zero-extended in the low 32 — so the bucket
     // key is injective, the shuffle carries two longs per row instead of
@@ -318,23 +316,9 @@ object MinHash {
     // BUCKETS are the same (band, hash) pairs the oracle replays; only
     // the physical key shape changes. The exploded frame materializes
     // eagerly (scalars only: id + key) so the self-join's two sides read
-    // it from cache instead of each re-running the explode over the
-    // signature arrays (measured ~2× the band-stage cost at 500k docs).
-    val bandedRaw = sigd
-      .select(col("id"), explode(bands(col("sig"), numBands, rowsPerBand)).as("b"))
-      .select(col("id"),
-        (shiftleft(col("b.band").cast("long"), 32) bitwiseOR
-          (col("b.band_hash").cast("long") bitwiseAND lit(0xFFFFFFFFL))).as("bk"))
-    val banded = checkpointDir match {
-      case Some(dir) =>
-        val bdir = dir + "_bands"
-        bandedRaw.write.mode("overwrite").parquet(bdir)
-        docs.sparkSession.read.parquet(bdir)
-      case None =>
-        val cached = bandedRaw.cache()
-        cached.count()
-        cached
-    }
+    // it from the checkpoint instead of each re-running the explode over
+    // the signature arrays (measured ~2× the band-stage cost at 500k docs).
+    val banded = bandFrame(sigd, numBands, rowsPerBand).localCheckpoint(true)
     val a = banded.select(col("bk").as("bk_a"), col("id").as("id_a"))
     val bd = banded.select(col("bk").as("bk_b"), col("id").as("id_b"))
     val idPairs = a.join(bd, col("bk_a") === col("bk_b") && col("id_a") < col("id_b"))
@@ -368,14 +352,8 @@ object MinHash {
                           numPerms: Int = 128, numBands: Int = 16,
                           rowsPerBand: Int = 8): DataFrame = {
     def prep(docs: DataFrame): (DataFrame, DataFrame) = {
-      val sig = withSignatures(docs, textCol, idCol, numPerms).cache()
-      sig.count()
-      val banded = sig
-        .select(col("id"), explode(bands(col("sig"), numBands, rowsPerBand)).as("b"))
-        .select(col("id"),
-          (shiftleft(col("b.band").cast("long"), 32) bitwiseOR
-            (col("b.band_hash").cast("long") bitwiseAND lit(0xFFFFFFFFL))).as("bk"))
-      (sig, banded)
+      val sig = withSignatures(docs, textCol, idCol, numPerms).localCheckpoint(true)
+      (sig, bandFrame(sig, numBands, rowsPerBand))
     }
     val (sigP, bandP) = prep(probe)
     val (sigI, bandI) = prep(index)

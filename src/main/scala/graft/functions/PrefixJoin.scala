@@ -52,13 +52,18 @@ object PrefixJoin {
     * bound) counted by the prefix joins inside an executed query, read
     * from that query's own observed metrics — pass the QueryExecution of
     * the action that ran, e.g. `df.queryExecution` after `df.collect()`.
-    * None when the query held no prefix join or has not run.
+    * None when the analyzed plan holds no prefix join. A prefix join whose
+    * observation is missing counts 0: with no candidates, AQE's
+    * empty-relation propagation replaces the observed subtree and drops
+    * its metric node.
     */
   def candidatePairs(qe: org.apache.spark.sql.execution.QueryExecution): Option[Long] = {
-    val counts = qe.observedMetrics.collect {
-      case (name, row) if name.startsWith(CandidatesObservation) => row.getLong(0)
+    val names = qe.analyzed.collect {
+      case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+        if c.name.startsWith(CandidatesObservation) => c.name
     }
-    if (counts.isEmpty) None else Some(counts.sum)
+    if (names.isEmpty) None
+    else Some(names.distinct.map(n => qe.observedMetrics.get(n).fold(0L)(_.getLong(0))).sum)
   }
 
   /** Verify-strategy config: byte budget for broadcasting the corpus
@@ -77,16 +82,6 @@ object PrefixJoin {
   val BroadcastBytesKey = "spark.graft.exactJaccard.broadcastMaxBytes"
   private val BroadcastBytesDefault = 1600000000L
   private val BytesPerTokenRow = 16L
-
-  /** Bookkeeping for the most recent call whose plan was never executed:
-    * its listener (and token cache) would otherwise linger for the session
-    * lifetime. Last-call-wins: registering a new call evicts (unregisters +
-    * unpersists) the previous pending one, so at most ONE unexecuted call's
-    * resources survive.
-    */
-  private val pending = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.util.QueryExecutionListener,
-      org.apache.spark.sql.SparkSession, DataFrame)](null)
 
   /** All pairs (id_a < id_b) with exact shingle-set Jaccard ≥ `threshold`,
     * plus the verified `jaccard` value.
@@ -115,11 +110,10 @@ object PrefixJoin {
     val hs = MinHash.withShingleHashSets(
       graft.core.Widen.toCores(docs.select(col(idCol), col(textCol))),
       textCol, idCol, n)
-    // (id, token) rows; consumed twice (df count + order join) → eager cache
-    // of scalars only, never the text. Unpersisted below once the (small)
-    // candidate-pair frame is materialized — a long-lived session calling
-    // this repeatedly must not accumulate corpus-sized token frames.
-    val tok = hs.select(col("id"), explode(col("hs")).as("tk")).cache()
+    // (id, token) rows; consumed twice (df count + order join) → eager
+    // localCheckpoint of scalars only, never the text (contract:
+    // [[MinHash.candidatePairs]]); the row count reads its local blocks
+    val tok = hs.select(col("id"), explode(col("hs")).as("tk")).localCheckpoint(true)
     val tokCount = tok.count()
     // Verify-join strategy: candidate volume scales with corpus size (and
     // explodes on low-entropy vocabularies — 5.6e8 pairs measured at sf10),
@@ -220,43 +214,7 @@ object PrefixJoin {
     val obsName = s"$CandidatesObservation${System.nanoTime}"
     val observed = cand.observe(obsName, count(lit(1)).as("n"))
     // The count lands in the executing query's own observedMetrics (read it
-    // with [[candidatePairs]]). Deferred bookkeeping, keyed to the FIRST
-    // action over the result: a QueryExecutionListener (not a parked thread
-    // — the old daemon thread leaked one parked thread per never-executed
-    // plan) releases the token cache, then unregisters itself.
-    // SINGLE-ACTION CONTRACT: the cache exists for the one action that
-    // materializes the result — a second action over the same DataFrame
-    // recomputes the token pipeline uncached (correct, just slower);
-    // callers wanting multiple actions should persist the RESULT.
-    // If the plan is never executed, the listener (and cache) stay until
-    // the NEXT exactJaccardPairs call evicts them (see [[pending]]).
-    val session = docs.sparkSession
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def mine(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        qe.observedMetrics.contains(obsName) ||
-          qe.analyzed.collectFirst {
-            case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
-              if c.name == obsName => c
-          }.isDefined
-      private def finish(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (mine(qe)) {
-          tok.unpersist()
-          pending.compareAndSet((this, session, tok), null)
-          session.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = finish(qe)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = finish(qe)
-    }
-    val prev = pending.getAndSet((listener, session, tok))
-    if (prev != null) {
-      prev._2.listenerManager.unregister(prev._1)
-      prev._3.unpersist()
-    }
-    session.listenerManager.register(listener)
+    // with [[candidatePairs]]).
     // Verify with the THRESHOLD-BOUNDED kernel (r18): every output row must
     // pass `jaccard ≥ threshold` anyway, so below-threshold candidates are
     // abandoned mid-merge-scan the moment c + min(remaining) < α (PPJoin's

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -148,42 +147,28 @@ object Similarity {
   /** The (vec_id, table, bucket)-exploded frame behind every LSH path —
     * SCALARS ONLY, pinned at a materialization boundary. Two reasons the
     * embedding column must not ride along: the frame feeds both sides of a
-    * self-join, so arrays would cross the bucket shuffle ×tables×2; and the
-    * cache boundary's columnar encoding of array columns costs more than
-    * the entire downstream join (measured 2.0 s of a 2.7 s query at bench
-    * scale). Embeddings re-attach from the input frame (one row per id)
-    * only where exact scoring needs them. Default = JVM cache (harness
-    * scale); `checkpointDir` = write-parquet + re-read, mirroring
-    * [[MinHash.candidatePairs]] — the 100 TB path where even the scalar
-    * frame outgrows executor storage memory. The cached frame lives until
-    * LRU eviction (the consumer's plan holds it; there is no safe point to
-    * unpersist inside a lazy operator) — long-lived sessions doing many LSH
-    * calls should prefer `checkpointDir`, which leaves nothing pinned.
+    * self-join, so arrays would cross the bucket shuffle ×tables×2; and
+    * materializing array columns at the boundary costs more than the
+    * entire downstream join (measured as a columnar cache: 2.0 s of a
+    * 2.7 s query at bench scale). Embeddings re-attach from the input frame (one row per id)
+    * only where exact scoring needs them. The boundary is an eager
+    * localCheckpoint: see [[MinHash.candidatePairs]] for the contract.
     */
-  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int,
-                            checkpointDir: Option[String]): DataFrame = {
+  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int): DataFrame = {
     // one native pass computes every table's bucket (posexplode position =
     // table index, matching the former lit(t) struct layout exactly). A
     // NULL embedding gets bucket 0 in every table — the expression-spec
     // semantics (null proj -> no sign bits) — because posexplode of the
-    // native NULL result would silently drop the id from every bucket table
-    val raw = vectors.select(col("vec_id"),
+    // native NULL result would silently drop the id from every bucket
+    // table. Materialized EAGERLY: the frame feeds both sides of a
+    // self-join in ONE downstream action, and a lazy cache let the two
+    // sides race to compute it concurrently (observed as "Block already
+    // exists" recompute warnings and ~2× the bucketing cost at bench scale)
+    vectors.select(col("vec_id"),
         coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
           array_repeat(lit(0L), tables)).as("bks"))
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
-    checkpointDir match {
-      case Some(dir) =>
-        raw.write.mode("overwrite").parquet(dir)
-        vectors.sparkSession.read.parquet(dir)
-      case None =>
-        // materialize EAGERLY: the frame feeds both sides of a self-join in
-        // ONE downstream action, and a lazy cache lets the two sides race to
-        // compute it concurrently (observed as "Block already exists"
-        // recompute warnings and ~2× the bucketing cost at bench scale)
-        val cached = raw.cache()
-        cached.count()
-        cached
-    }
+      .localCheckpoint(true)
   }
 
   /** Approximate top-k: candidate id pairs share an LSH bucket (scalar
@@ -192,16 +177,11 @@ object Similarity {
     * improves with fewer bits (bigger buckets) or multiple tables (union
     * over `tables` seeds).
     *
-    * NOT lazy: building the returned DataFrame runs the bucketing job
-    * eagerly (cache + count, or a parquet checkpoint when `checkpointDir`
-    * is set) to stop the self-join's two sides racing to materialize the
-    * same cache block. Callers constructing plans without executing them
-    * still pay the bucketing cost, and the cache stays pinned until LRU
-    * eviction.
+    * Building the result runs the bucketing job eagerly (a localCheckpoint,
+    * see [[MinHash.candidatePairs]] for the contract).
     */
-  def lshTopK(vectors: DataFrame, k: Int = 5, bits: Int = 12, tables: Int = 2,
-              checkpointDir: Option[String] = None): DataFrame = {
-    val bucketed = bucketedFrame(vectors, bits, tables, checkpointDir)
+  def lshTopK(vectors: DataFrame, k: Int = 5, bits: Int = 12, tables: Int = 2): DataFrame = {
+    val bucketed = bucketedFrame(vectors, bits, tables)
     val a = bucketed.select(col("table"), col("bucket"), col("vec_id").as("query_id"))
     val b = bucketed.select(col("table"), col("bucket"), col("vec_id").as("neighbor_id"))
     val cand = a.join(b, Seq("table", "bucket"))
@@ -234,15 +214,14 @@ object Similarity {
     * this arithmetic (the registry's injected-copy query runs 8 tables
     * after a 4-table miss materialized on the sf0.1 corpus).
     *
-    * NOT lazy: constructing the result runs the bucketing job eagerly (see
-    * [[lshTopK]] — same cache-race rationale, same pinned-cache tradeoff).
+    * Building the result runs the bucketing job eagerly (see [[lshTopK]]).
     */
   def dedupByCosineLsh(vectors: DataFrame, threshold: Double, bits: Int = 8,
-                       tables: Int = 4, checkpointDir: Option[String] = None): DataFrame = {
+                       tables: Int = 4): DataFrame = {
     // exactly-once candidates via the first-colliding-table filter (r18;
     // see lshCandidatePairsDeduped) — the downstream __dup distinct is
     // indifferent to emission multiplicity, so output is unchanged
-    val candidates = lshCandidatePairsDeduped(vectors, bits, tables, checkpointDir)
+    val candidates = lshCandidatePairsDeduped(vectors, bits, tables)
     // re-attach embeddings from the INPUT frame (one row per id) — a
     // distinct over the bucketed frame would shuffle the arrays ×tables —
     // with each vector's norm computed ONCE here, not per candidate pair
@@ -279,9 +258,8 @@ object Similarity {
   private val NearDupBroadcastBytesDefault = 1600000000L
 
   def nearDupPairsLsh(vectors: DataFrame, threshold: Double, bits: Int = 12,
-                      tables: Int = 64, checkpointDir: Option[String] = None): DataFrame =
-    verifyCandidatePairs(vectors,
-      lshCandidatePairsDeduped(vectors, bits, tables, checkpointDir), threshold)
+                      tables: Int = 64): DataFrame =
+    verifyCandidatePairs(vectors, lshCandidatePairsDeduped(vectors, bits, tables), threshold)
 
   /** Distinct 16-B candidate id pairs from a bucketed (table, bucket,
     * vec_id) frame — the self-join stage of [[nearDupPairsLsh]], used as
@@ -320,30 +298,23 @@ object Similarity {
     * disappears: nothing between the bucket join and the verify filter
     * shuffles at all.
     *
-    * The per-id frame is the cache boundary (n rows of tables longs ≈ 2.4×
-    * smaller than the exploded frame the old path cached); the exploded
-    * frame is derived per consumer by a posexplode over the cache. Past the
+    * The per-id frame is the materialization boundary (n rows of tables
+    * longs ≈ 2.4× smaller than the exploded frame); the exploded frame is
+    * derived per consumer by a posexplode over the checkpoint. Past the
     * bucket-vector broadcast budget the stage falls back to the old
     * distinct form — identical output either way.
     */
-  private[graft] def lshCandidatePairsDeduped(vectors: DataFrame, bits: Int, tables: Int,
-                                              checkpointDir: Option[String]): DataFrame = {
+  private[graft] def lshCandidatePairsDeduped(vectors: DataFrame, bits: Int,
+                                              tables: Int): DataFrame = {
     // one native pass computes every table's bucket; NULL embedding →
-    // bucket 0 in every table (the bucketedFrame convention, see its note)
-    val pre = vectors.select(col("vec_id"),
+    // bucket 0 in every table (the bucketedFrame convention, see its note).
+    // Eager for the same reason as bucketedFrame: both self-join sides (and
+    // the broadcast build) consume it in one downstream action; the row
+    // count then reads the checkpoint's local blocks, not the input.
+    val perId = vectors.select(col("vec_id"),
       coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
-        array_repeat(lit(0L), tables)).as("bks"))
-    val (perId, n) = checkpointDir match {
-      case Some(dir) =>
-        pre.write.mode("overwrite").parquet(dir)
-        val back = vectors.sparkSession.read.parquet(dir)
-        (back, back.count())
-      case None =>
-        // eager for the same reason as bucketedFrame: both self-join sides
-        // (and the broadcast build) consume it in one downstream action
-        val cached = pre.cache()
-        (cached, cached.count())
-    }
+        array_repeat(lit(0L), tables)).as("bks")).localCheckpoint(true)
+    val n = perId.count()
     val exploded = perId
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
     val budget = vectors.sparkSession.conf
@@ -394,34 +365,13 @@ object Similarity {
     * past the budget — or Spark's 8 GB hard wall — unchecked. Outside the
     * margin the estimate is settled by one bounded probe — `take(1)` for
     * dims (empty frame ⇒ skip the hint and stay lazy, the r15-advice fix)
-    * + `count()` for rows — whose resulting byte figure is CACHED per
-    * canonicalized plan (r16 task 6): a sweep that verifies the same
-    * vector frame many times (DBSCAN + embed-neardup + semantic rows) pays
-    * one probe, not one per call. The cache is bounded by eviction-on-size
-    * (it only ever holds a handful of distinct corpus frames per session).
+    * + `count()` for rows — run once per call: the figure only picks the
+    * join strategy, so no statistic outlives the call.
     */
-  private val probedBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, LogicalPlan), Long]()
-
-  /** Exact row-count × row-width byte estimate for a vector frame, probed
-    * once per (session, canonicalized plan) and cached. -1 = empty frame.
-    */
-  private[graft] def probedVectorBytes(vectors: DataFrame): Long = {
-    val key = (vectors.sparkSession, vectors.queryExecution.optimizedPlan.canonicalized)
-    val cached = probedBytesCache.get(key)
-    if (cached != null && cached != 0L) cached
-    else {
-      val firstDims = vectors.select(size(col("embedding"))).take(1)
-      val bytes =
-        if (firstDims.isEmpty) -1L
-        else {
-          val dims = firstDims(0).getInt(0)
-          vectors.count() * (dims.toLong * 8L + 64L)
-        }
-      if (probedBytesCache.size > 64) probedBytesCache.clear()
-      probedBytesCache.put(key, bytes)
-      bytes
-    }
+  private def probedVectorBytes(vectors: DataFrame): Long = {
+    val firstDims = vectors.select(size(col("embedding"))).take(1)
+    if (firstDims.isEmpty) -1L
+    else vectors.count() * (firstDims(0).getInt(0).toLong * 8L + 64L)
   }
 
   private[graft] def verifyCandidatePairs(vectors: DataFrame, candidates: DataFrame,
@@ -479,17 +429,16 @@ object Similarity {
     * never crosses the threshold) — the same semantics as
     * [[dedupByCosine]]/[[dedupByCosineLsh]].
     *
-    * NOT lazy: the probe-list frame feeds both sides of a self-join in one
-    * downstream action, so it materializes eagerly (cache + count, or a
-    * parquet checkpoint when `checkpointDir` is set) — the same cache-race
+    * The probe-list frame feeds both sides of a self-join in one
+    * downstream action, so it materializes eagerly (a localCheckpoint, see
+    * [[MinHash.candidatePairs]] for the contract) — the same race
     * rationale as [[bucketedFrame]].
     */
   def semanticDedup(vectors: DataFrame, threshold: Double, nlist: Int = 16,
-                    nprobe: Int = 2, iters: Int = 5,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    nprobe: Int = 2, iters: Int = 5): DataFrame = {
     val cents = kmeansCentroids(vectors, nlist, iters)
     val centDf = centroidTable(vectors.sparkSession, cents)
-    val probesRaw = vectors
+    val probes = vectors
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(centDf))
@@ -498,15 +447,7 @@ object Similarity {
         VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
         col("__list_id").as("i")))), 1, nprobe).as("__near"))
       .select(col("vec_id"), explode(expr("transform(__near, s -> s.i)")).as("list"))
-    val probes = checkpointDir match {
-      case Some(dir) =>
-        probesRaw.write.mode("overwrite").parquet(dir)
-        vectors.sparkSession.read.parquet(dir)
-      case None =>
-        val cached = probesRaw.cache()
-        cached.count()
-        cached
-    }
+      .localCheckpoint(true)
     val a = probes.select(col("list"), col("vec_id").as("id_a"))
     val b = probes.select(col("list"), col("vec_id").as("id_b"))
     val candidates = a.join(b, Seq("list"))

@@ -54,21 +54,6 @@ object RangeJoin {
       .drop("__pbkt", "__ibkt")
   }
 
-  /** Probe cache for [[adaptiveBucketSeconds]], keyed on the interval
-    * frame's canonicalized analyzed plan (the [[graft.calc.WindowCalcs]]
-    * skew-probe pattern): the same interval source probed twice costs one
-    * scan per session. The statistic is a plan-choice input ONLY — every
-    * bucket width yields bit-identical join output — so staleness can cost
-    * performance, never correctness.
-    */
-  private val spanStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
-
-  private[operators] def spanStatsCached(intervals: DataFrame): Boolean =
-    spanStatsCache.containsKey(intervals.queryExecution.analyzed.canonicalized)
-  private[operators] def spanStatsCacheClear(): Unit = spanStatsCache.clear()
-
   /** Probed bucket width: the p75 of the interval-span distribution,
     * rounded UP to the next power-of-two seconds and clamped to
     * [1 s, 86400 s]. Rationale: replication per interval is
@@ -78,7 +63,9 @@ object RangeJoin {
     * rows. p75 via `approx_percentile` (one pass, GK-sketch bounded state,
     * merge-safe — the same 100 TB contract as every sketch here); the
     * power-of-two rounding makes the chosen width stable under probe
-    * wobble so plans don't flap between runs.
+    * wobble so plans don't flap between runs. One probe job per call: the
+    * width is a plan-choice input only (every width yields bit-identical
+    * join output), so no statistic is kept between calls.
     */
   def adaptiveBucketSeconds(
       intervals: DataFrame,
@@ -88,12 +75,8 @@ object RangeJoin {
       .filter(col(endCol) > col(startCol))
       .select(((unix_micros(col(endCol)) - unix_micros(col(startCol))) / lit(1000000L))
         .cast("long").as("__span_s"))
-    val p75: Long = spanStatsCache.computeIfAbsent(
-      probe.queryExecution.analyzed.canonicalized,
-      _ => {
-        val r = probe.agg(expr("approx_percentile(__span_s, 0.75)")).head()
-        if (r.isNullAt(0)) 3600L else math.max(1L, r.getLong(0))
-      })
+    val r = probe.agg(expr("approx_percentile(__span_s, 0.75)")).head()
+    val p75 = if (r.isNullAt(0)) 3600L else math.max(1L, r.getLong(0))
     val clamped = math.min(86400L, math.max(1L, p75))
     java.lang.Long.highestOneBit(clamped * 2 - 1) // round UP to power of two
   }

@@ -698,8 +698,8 @@ object QueriesDomain {
       IndicatorPass.patternFields.map(f => col(f.name))): _*)
   }
 
-  /** Bench variant with runtime path selection ([[WindowCalcs.fewSymbolSkew]],
-    * cached probe): flat single-exchange pass on uniform symbol layouts,
+  /** Bench variant with runtime path selection ([[WindowCalcs.fewSymbolSkew]]
+    * probe): flat single-exchange pass on uniform symbol layouts,
     * warm-up-overlap bucketed pass with the density-derived
     * [[IndicatorPass.autoBucket]] spec when a hot symbol would serialize —
     * parallelism symbols × buckets instead of symbols.
@@ -711,7 +711,7 @@ object QueriesDomain {
     * h1_bucketed/h2_bucketed hash rows below.
     */
   private def h2Bench(s: SparkSession, dir: String): DataFrame = {
-    // auto path selection, same cached skew probe as W1/W4: below the
+    // auto path selection, same skew probe as W1/W4: below the
     // threshold the flat 1-exchange pass wins (no overlap replay, no
     // explode); above it the bucketed pass buys symbols × buckets
     // parallelism against a hot symbol's serial window
@@ -1257,11 +1257,14 @@ object QueriesDomain {
   /** Resample with LINEAR interpolation — pandas `resample('1min')
     * .interpolate('linear')`: gap buckets take
     * `prev + (next − prev) · (b − pb)/(nb − pb)` between the nearest real
-    * closes. Same tick-count-independent grid as [[g8]]; the two extra
-    * windows (backward last-non-null carrying (close, bucket), forward
-    * first-non-null) share g8's single per-symbol sort — Spark plans ONE
-    * exchange+sort for all four window functions. Both grid ends are real
-    * candles (bounds come from the data), so prev/next always exist.
+    * closes. Same tick-count-independent grid as [[g8]]. Both fills are
+    * running frames (unboundedPreceding..currentRow), each one pass over
+    * its sorted partition: the backward last-non-null in bucket order, the
+    * forward next-non-null as a last-non-null in DESCENDING bucket order
+    * (a currentRow..unboundedFollowing frame re-aggregates to the partition
+    * end per row, O(n²) per symbol grid). One exchange, two sorts. Both
+    * grid ends are real candles (bounds come from the data), so prev/next
+    * always exist.
     * The interpolation arithmetic is the same IEEE expression tree in both
     * engines: one integer-ratio division, one multiply, one add.
     */
@@ -1276,15 +1279,15 @@ object QueriesDomain {
       explode(sequence(col("mnb"), col("mxb"))).as("bucket"))
     val back = Window.partitionBy(col("symbol")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window.partitionBy(col("symbol")).orderBy(col("bucket"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val fwd = Window.partitionBy(col("symbol")).orderBy(col("bucket").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val j = grid.join(c1m, Seq("symbol", "bucket"), "left")
       .select(col("symbol"), col("bucket"), col("close"),
         last(col("close"), ignoreNulls = true).over(back).as("pc"),
         last(when(col("close").isNotNull, col("bucket")), ignoreNulls = true)
           .over(back).as("pb"),
-        first(col("close"), ignoreNulls = true).over(fwd).as("nc"),
-        first(when(col("close").isNotNull, col("bucket")), ignoreNulls = true)
+        last(col("close"), ignoreNulls = true).over(fwd).as("nc"),
+        last(when(col("close").isNotNull, col("bucket")), ignoreNulls = true)
           .over(fwd).as("nb"))
     val frac = (col("bucket") - col("pb")).cast("double") /
       (col("nb") - col("pb")).cast("double")

@@ -66,10 +66,9 @@ object QueriesLlm {
     */
   private def minhash(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // eager cache: the crossJoined aggregate subtrees consume `pairs` in
-    // the single downstream action; lazy, they race to compute it
-    val pairs = MinHash.candidatePairs(docs).cache()
-    pairs.count()
+    // eager localCheckpoint: the crossJoined aggregate subtrees consume
+    // `pairs` in the single downstream action; lazy, they race to compute it
+    val pairs = MinHash.candidatePairs(docs).localCheckpoint(true)
     val survivors = MinHash.dedupFuzzyFromPairs(docs, pairs)
     // LSH-then-verify: true n-gram Jaccard on the candidates only. The
     // verified frame carries est_jaccard too, so the candidate/dup counts

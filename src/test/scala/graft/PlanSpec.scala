@@ -65,17 +65,21 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("struct<doc_id:bigint,text:string>"), "scan reads only id + text")
   }
 
+  /** Column names of each eager materialization boundary in the plan: a
+    * localCheckpoint shows as a LogicalRDD. */
+  private def checkpointed(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.output.map(_.name)
+    }
+
   test("lsh bucket frame caches scalars only — arrays never ride the self-join") {
     val e = Tables.embeddings(spark, dir)
     val df = graft.functions.Similarity.lshTopK(e, k = 1, bits = 8, tables = 2)
-    val cached = df.queryExecution.optimizedPlan.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        m.output.map(_.name)
-    }
-    assert(cached.nonEmpty, "the bucketed frame must hit a cache boundary")
+    val cached = checkpointed(df)
+    assert(cached.nonEmpty, "the bucketed frame must hit a checkpoint boundary")
     cached.foreach { cols =>
       assert(cols.sorted == Seq("bucket", "table", "vec_id"),
-        s"bucket frame must be scalar-only, got $cols — columnar-encoding the " +
+        s"bucket frame must be scalar-only, got $cols — materializing the " +
           "embedding arrays costs more than the downstream join")
     }
   }
@@ -84,12 +88,8 @@ class PlanSpec extends SparkSpec {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
     val df = graft.functions.Similarity.semanticDedup(e, threshold = 0.99, nlist = 4, nprobe = 2)
-    val plan = df.queryExecution.optimizedPlan
-    val cached = plan.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        m.output.map(_.name)
-    }
-    assert(cached.nonEmpty, "the probe-list frame must hit a cache boundary")
+    val cached = checkpointed(df)
+    assert(cached.nonEmpty, "the probe-list frame must hit a checkpoint boundary")
     cached.foreach { cols =>
       assert(cols.sorted == Seq("list", "vec_id"),
         s"probe frame must be scalar-only, got $cols — the embedding arrays " +
@@ -108,6 +108,23 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Window "), "window exec present")
     assert(!p.contains("decimal(18,4)) ") || !p.contains("avg(cast"),
       "production path must not carry the oracle's decimal window sums")
+  }
+
+  test("g9 forward fill: no window frame runs from the current row to the partition end") {
+    // a currentRow..unboundedFollowing frame re-aggregates to the partition
+    // end for every row: O(n²) per symbol grid
+    val p = graft.queries.Registry.queries("g9_resample_interp")(spark, dir)
+      .queryExecution.sparkPlan
+    val windows = p.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, "g9 fills through window functions")
+    val frames = windows.flatMap(_.windowExpression.flatMap(_.collect {
+      case f: org.apache.spark.sql.catalyst.expressions.SpecifiedWindowFrame => f
+    }))
+    assert(frames.nonEmpty, "the fills carry explicit row frames")
+    val toEnd = frames.filter(f =>
+      f.lower == org.apache.spark.sql.catalyst.expressions.CurrentRow &&
+        f.upper == org.apache.spark.sql.catalyst.expressions.UnboundedFollowing)
+    assert(toEnd.isEmpty, s"quadratic forward frames: $toEnd")
   }
 
   test("bucketed tables: co-located join with ZERO exchanges; bucket pruning on key filter") {

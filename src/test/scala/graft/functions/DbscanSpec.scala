@@ -94,9 +94,9 @@ class DbscanSpec extends SparkSpec {
     }
     val vecs = (base ++ dups).toDF("vec_id", "embedding")
     val ref = Similarity.lshCandidatePairs(
-      Similarity.bucketedFrame(vecs, bits = 6, tables = 12, None))
+      Similarity.bucketedFrame(vecs, bits = 6, tables = 12))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val onceRows = Similarity.lshCandidatePairsDeduped(vecs, bits = 6, tables = 12, None)
+    val onceRows = Similarity.lshCandidatePairsDeduped(vecs, bits = 6, tables = 12)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(onceRows.toSet == ref, "first-table filter must keep the exact candidate set")
     assert(onceRows.length == ref.size, "every pair must be emitted exactly once")
@@ -104,7 +104,7 @@ class DbscanSpec extends SparkSpec {
     // fallback regime (budget 0 → distinct path) must agree too
     spark.conf.set(Similarity.BucketVectorBroadcastBytesKey, "0")
     try {
-      val fb = Similarity.lshCandidatePairsDeduped(vecs, bits = 6, tables = 12, None)
+      val fb = Similarity.lshCandidatePairsDeduped(vecs, bits = 6, tables = 12)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(fb == ref, "fallback distinct path must produce the same set")
     } finally spark.conf.unset(Similarity.BucketVectorBroadcastBytesKey)

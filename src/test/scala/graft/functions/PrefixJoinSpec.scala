@@ -92,56 +92,59 @@ class PrefixJoinSpec extends SparkSpec {
     }
   }
 
-  test("token-explode cache is released after the first action over the result") {
+  test("token checkpoint is reused by a 2nd action, freed with the result") {
     val docs = Seq(
       1L -> "a b c d e f g h",
       2L -> "a b c d e f g h",
       3L -> "p q r s t u v w")
-    // Track the SPECIFIC RDD ids this call persists (diff before/after the
-    // plan is built) instead of asserting the session-global persistent-RDD
-    // count is zero — another suite sharing the session may legitimately
-    // hold caches, and the global assert flaked on that.
+    // this call's own RDD ids (a diff against the ids before the call), not
+    // the session-global persistent set — other suites share the session
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val result = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
-    result.collect()
-    // the query-execution listener unpersists tok once the action completes
-    // (async on the listener bus); poll briefly for the release
-    val deadline = System.nanoTime() + 10L * 1000000000L
-    var mine = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    while (mine.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      mine = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    }
-    assert(mine.isEmpty,
-      s"expected this call's persistent RDDs released after the action, still cached: $mine")
-    // and the action's own observed metrics carry a real candidate count
+    var result = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
+    val mine = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(mine.nonEmpty, "the token frame is checkpointed while the result is built")
+    val first = result.collect().toSet
     assert(PrefixJoin.candidatePairs(result.queryExecution).exists(_ >= 1L))
+    // a second action reads the same blocks: nothing released, nothing new
+    assert(result.collect().toSet === first)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before) === mine)
+    result = null
+    assert(MaterializationSpec.releasedAfterGc(spark, mine),
+      "the token checkpoint must be freed once the result is unreachable")
   }
 
-  test("a never-executed call's token cache is evicted by the next call") {
+  test("a never-executed result's token checkpoint goes when it is dropped") {
     val docs = Seq(
       1L -> "a b c d e f g h",
       2L -> "a b c d e f g h").toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // build a plan and never run an action over it: its tok cache (pinned
-    // eagerly by the internal count) must NOT outlive the next call
-    PrefixJoin.exactJaccardPairs(docs, 0.8)
-    val afterFirst = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(afterFirst.nonEmpty, "first call should have pinned its token cache")
+    var unrun = PrefixJoin.exactJaccardPairs(docs, 0.8)
+    val mine = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(mine.nonEmpty, "the call should have checkpointed its token frame")
+    // a second call does not touch the first call's blocks
     val second = PrefixJoin.exactJaccardPairs(docs, 0.8)
-    // eviction is synchronous in the second call (last-call-wins registry)
-    val afterSecond = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(afterSecond.intersect(afterFirst).isEmpty,
-      s"first call's cache should be evicted, still held: ${afterSecond.intersect(afterFirst)}")
-    // executing the second call releases its own cache via the listener
-    second.collect()
-    val deadline = System.nanoTime() + 10L * 1000000000L
-    var left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    while (left.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(mine.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    assert(second.count() === 1L)
+    unrun = null
+    assert(MaterializationSpec.releasedAfterGc(spark, mine),
+      "an unexecuted result's checkpoint must be freed once it is unreachable")
+  }
+
+  test("no candidates: the candidate count reads 0, not None") {
+    // AQE's empty-relation propagation drops the observed candidate subtree
+    // when the prefix join emits nothing; the count must still read 0
+    val rnd = new scala.util.Random(0)
+    val vocab = (0 until 10).map(i => s"t$i")
+    val docs = (0 until 20).map { id =>
+      (id.toLong, Seq.fill(6 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }
-    assert(left.isEmpty, s"second call's cache should be released, still: $left")
+    val pairs = PrefixJoin.exactJaccardPairs(docs.toDF("doc_id", "text"), 0.8)
+    assert(pairs.collect().isEmpty && bruteForce(docs, 0.8).isEmpty, "fixture has no pairs")
+    assert(PrefixJoin.candidatePairs(pairs.queryExecution) === Some(0L))
+    // a query without a prefix join has no count at all
+    val plain = docs.toDF("doc_id", "text")
+    plain.collect()
+    assert(PrefixJoin.candidatePairs(plain.queryExecution) === None)
   }
 
   test("verify strategies agree: broadcast-sets == shuffled SMJ, and the " +
@@ -185,8 +188,6 @@ class PrefixJoinSpec extends SparkSpec {
   }
 
   test("concurrent calls in one session: brute-force pairs, own candidate counts") {
-    // cache release is not asserted: a concurrent call evicts the other
-    // call's pending token cache by design ([[PrefixJoin]]'s `pending`).
     // Each corpus plants near-duplicates (one appended word) so it has
     // candidates: with none, AQE prunes the observed subtree as empty.
     val corpora = Seq(0 -> 3, 1 -> 6).map { case (seed, planted) =>
