@@ -493,13 +493,8 @@ object QueriesDomain {
 
   /** W1 — rolling-60 average volume + spike flag
     * (detect_volume_spikes, candle_to_calcs.py:517-526).
-    */
-  private def w1x(exact: Boolean)(s: SparkSession, dir: String): DataFrame =
-    WindowCalcs.withVolumeSpikes(candles(s, dir), exact = exact)
-      .select(col("symbol"), tsMicros(col("timestamp")).as("ts"),
-        col("volume"), col("rolling_avg_volume"), col("is_volume_spike"))
-
-  /** The oracle row runs the BUCKETED scale path: bit-identical to the
+    *
+    * The oracle row runs the BUCKETED scale path: bit-identical to the
     * exact global-window form (WindowCalcsSpec pins it), so a hash-green
     * row is a driver-visible proof that the symbols × buckets plan computes
     * the same rolling-60 frame as the per-symbol window.

@@ -110,21 +110,22 @@ class PlanSpec extends SparkSpec {
       "production path must not carry the oracle's decimal window sums")
   }
 
-  test("g9 forward fill: no window frame runs from the current row to the partition end") {
-    // a currentRow..unboundedFollowing frame re-aggregates to the partition
-    // end for every row: O(n²) per symbol grid
-    val p = graft.queries.Registry.queries("g9_resample_interp")(spark, dir)
-      .queryExecution.sparkPlan
-    val windows = p.collect { case w: WindowExec => w }
-    assert(windows.nonEmpty, "g9 fills through window functions")
-    val frames = windows.flatMap(_.windowExpression.flatMap(_.collect {
-      case f: org.apache.spark.sql.catalyst.expressions.SpecifiedWindowFrame => f
-    }))
-    assert(frames.nonEmpty, "the fills carry explicit row frames")
-    val toEnd = frames.filter(f =>
-      f.lower == org.apache.spark.sql.catalyst.expressions.CurrentRow &&
-        f.upper == org.apache.spark.sql.catalyst.expressions.UnboundedFollowing)
-    assert(toEnd.isEmpty, s"quadratic forward frames: $toEnd")
+  test("frame lint: no domain or relational registry row frames a window from inside the partition to its end") {
+    // a frame from inside the partition to UnboundedFollowing re-aggregates
+    // to the partition end for every row: O(n²) per partition (g9's old
+    // currentRow..unboundedFollowing forward fill). Builds physical plans
+    // only; no row is executed (a few rows' size probes run a small job
+    // while their plan is built).
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+    val rows = graft.queries.QueriesDomain.all ++ graft.queries.QueriesRelational.all
+    val all = rows.flatMap { q =>
+      q.run(spark, dir).queryExecution.sparkPlan.collect { case w: WindowExec => w }
+        .flatMap(_.windowExpression.flatMap(_.collect { case f: SpecifiedWindowFrame => q.name -> f }))
+    }
+    assert(all.exists(_._1 == "g9_resample_interp"), "g9 fills through explicit row frames")
+    val toEnd = all.filter { case (_, f) =>
+      f.upper == UnboundedFollowing && f.lower != UnboundedPreceding }
+    assert(toEnd.isEmpty, "quadratic window frames (row, frame)")
   }
 
   test("bucketed tables: co-located join with ZERO exchanges; bucket pruning on key filter") {
