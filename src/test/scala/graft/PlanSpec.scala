@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{CurrentRow, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -110,18 +111,28 @@ class PlanSpec extends SparkSpec {
       "production path must not carry the oracle's decimal window sums")
   }
 
-  test("frame lint: no domain or relational registry row frames a window from inside the partition to its end") {
-    // a frame from inside the partition to UnboundedFollowing re-aggregates
-    // to the partition end for every row: O(n²) per partition (g9's old
-    // currentRow..unboundedFollowing forward fill). Builds physical plans
-    // only; no row is executed (a few rows' size probes run a small job
-    // while their plan is built).
-    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
-    val rows = graft.queries.QueriesDomain.all ++ graft.queries.QueriesRelational.all
-    val all = rows.flatMap { q =>
+  // (row name, frame) for every explicit frame in the rows' physical plans.
+  // Builds plans only; no row is executed (a few rows' size probes run a
+  // small job while their plan is built).
+  private def windowFrames(rows: Seq[graft.queries.Q]): Seq[(String, SpecifiedWindowFrame)] =
+    rows.flatMap { q =>
       q.run(spark, dir).queryExecution.sparkPlan.collect { case w: WindowExec => w }
         .flatMap(_.windowExpression.flatMap(_.collect { case f: SpecifiedWindowFrame => q.name -> f }))
     }
+
+  test("g9 forward fill: no window frame runs from the current row to the partition end") {
+    // a currentRow..unboundedFollowing frame re-aggregates to the partition
+    // end for every row: O(n²) per symbol grid
+    val frames = windowFrames(graft.queries.QueriesDomain.all.filter(_.name == "g9_resample_interp"))
+    assert(frames.nonEmpty, "the fills carry explicit row frames")
+    val toEnd = frames.filter { case (_, f) => f.lower == CurrentRow && f.upper == UnboundedFollowing }
+    assert(toEnd.isEmpty, s"quadratic forward frames: $toEnd")
+  }
+
+  test("frame lint: no registry row frames a window from mid-partition to its end") {
+    // the general form of the g9 check: a frame from inside the partition to
+    // UnboundedFollowing re-aggregates to the partition end for every row
+    val all = windowFrames(graft.queries.QueriesDomain.all ++ graft.queries.QueriesRelational.all)
     assert(all.exists(_._1 == "g9_resample_interp"), "g9 fills through explicit row frames")
     val toEnd = all.filter { case (_, f) =>
       f.upper == UnboundedFollowing && f.lower != UnboundedPreceding }
