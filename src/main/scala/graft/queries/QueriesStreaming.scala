@@ -2,14 +2,19 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 import graft.calc.IndicatorPass
 import graft.operators.CandleAggregator
 import graft.queries.Det.tsMicros
-import graft.streaming.{StreamingCandles, StreamingIndicators}
+import graft.streaming.{StreamingAnchoredVwap, StreamingCandles, StreamingIndicators, StreamingSketch}
+import graft.streaming.StreamingAnchoredVwap.usTs
 
 /** §2.9 on the scoreboard: the REAL Structured Streaming pipelines run over
   * the sf ticks as event-time micro-batches and are counted against the
@@ -28,24 +33,96 @@ import graft.streaming.{StreamingCandles, StreamingIndicators}
   * sources, same operators). The sorted toLocalIterator feed here is the
   * harness, not part of the computation under test, which runs distributed
   * like any other streaming query; slices stay bounded at any SF.
+  *
+  * Every row drives its query through one finite-replay harness:
+  * [[replay]] (MemoryStream → memory sink), [[drainFiles]] (file source
+  * with an on-disk checkpoint) and [[withScratch]] (the scratch directory
+  * those file queries read and write).
   */
 object QueriesStreaming {
 
-  /** Bounded-memory feed: stream a SORTED Dataset through toLocalIterator
-    * in ~`target` slices (capped at `cap` rows per slice so driver memory
-    * stays bounded at any SF — a full collect() scaled linearly and the
-    * 55 MB MemoryStream batches it produced at sf1 flooded the task
-    * scheduler). toLocalIterator on a sorted frame yields partitions in
-    * range order, so the event-time feed order is preserved.
+  /** A finite replay of one streaming query, drained. `add` appends one
+    * micro-batch and drains it (valid while the replay runs, i.e. inside
+    * its `tail`).
     */
-  private def feedSorted[T](sorted: org.apache.spark.sql.Dataset[T],
-                            target: Int = 20, cap: Int = 65536)(
-      add: Seq[T] => Unit): Unit = {
-    import scala.jdk.CollectionConverters._
-    val n = sorted.count()
-    val size = math.max(1L, math.min(cap.toLong, n / target + 1)).toInt
-    sorted.toLocalIterator().asScala.grouped(size).foreach(sl => add(sl.toSeq))
+  private final class Replay[T](spark: SparkSession, name: String,
+                                in: MemoryStream[T], q: StreamingQuery) {
+    def add(rows: Seq[T]): Unit = { in.addData(rows); q.processAllAvailable() }
+
+    /** The memory sink's rows so far. */
+    def output: DataFrame = spark.table(name)
+
+    /** State rows of the query's stateful operator, per micro-batch. */
+    def stateRows: Seq[Long] = QueriesStreaming.stateRows(q)
+
+    /** Reads the replay, then drops its memory table: for rows whose result
+      * is a local frame, so repeated runs leave no temp view behind. A row
+      * that returns [[output]] itself keeps the table.
+      */
+    def consume[R](read: Replay[T] => R): R =
+      try read(this) finally spark.catalog.dropTempView(name)
   }
+
+  private def stateRows(q: StreamingQuery): Seq[Long] =
+    q.recentProgress.toSeq.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+
+  /** The finite-replay harness: runs `query` over a MemoryStream carrying
+    * `feed`'s columns into a memory sink (or `sink`), adds the SORTED
+    * `feed` in slices of `slice(count)` rows, then whatever `tail` adds
+    * (sentinels, a barrier), draining after every add, and stops the query
+    * in finally; on failure it drops the memory table too.
+    *
+    * The feed is bounded: toLocalIterator holds one partition and one slice
+    * on the driver at a time (a full collect() scaled linearly and the
+    * 55 MB MemoryStream batches it produced at sf1 flooded the task
+    * scheduler), and on a sorted frame it yields partitions in range
+    * order, so the event-time feed order is preserved. The default slice
+    * is ~1/20 of the feed, capped at 65,536 rows.
+    */
+  private def replay[T: Encoder](spark: SparkSession, feed: Dataset[T],
+      slice: Long => Int = n => math.max(1L, math.min(65536L, n / 20 + 1)).toInt,
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row] = _.format("memory"))(
+      query: DataFrame => DataFrame)(
+      tail: Replay[T] => Unit = (_: Replay[T]) => ()): Replay[T] = {
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[T]
+    val name = s"graft_replay_${System.nanoTime}"
+    val q = sink(query(in.toDF().toDF(feed.columns.toSeq: _*)).writeStream)
+      .queryName(name).outputMode("append").start()
+    val r = new Replay(spark, name, in, q)
+    try {
+      feed.toLocalIterator().asScala.grouped(slice(feed.count())).foreach(sl => r.add(sl.toSeq))
+      tail(r)
+      r
+    } catch { case e: Throwable => spark.catalog.dropTempView(name); throw e }
+    finally q.stop()
+  }
+
+  /** Runs `query` over the parquet files under `src` into a parquet sink at
+    * `sink`, checkpointed at `ckpt`, until drained, then stops it. Returns
+    * its state rows per micro-batch.
+    */
+  private def drainFiles(spark: SparkSession, schema: StructType, src: String,
+                         sink: String, ckpt: String)(
+      query: DataFrame => DataFrame): Seq[Long] = {
+    val q = query(spark.readStream.schema(schema).parquet(src))
+      .writeStream.format("parquet").option("path", sink)
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    try { q.processAllAvailable(); stateRows(q) } finally q.stop()
+  }
+
+  /** Runs `body` on a fresh scratch directory, deleted in finally. Every
+    * read of it must be eager inside `body`.
+    */
+  private def withScratch[R](prefix: String)(body: String => R): R = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try body(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  /** The distinct event types: one flush sentinel per group (bounded). */
+  private def eventTypes(ev: DataFrame): Seq[String] =
+    ev.select(col("event_type")).distinct().collect().map(_.getString(0)).toSeq
 
   /** batch.except(stream) / stream.except(batch) over bit-exact rows.
     * Set semantics are safe: every compared frame is unique per
@@ -60,7 +137,6 @@ object QueriesStreaming {
 
   private def streamEquiv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val ticks = graft.core.Tables.ticks(spark, dir)
     val batchCandles = CandleAggregator.aggregate(ticks).cache()
@@ -71,46 +147,34 @@ object QueriesStreaming {
       .orderBy(col("timestamp"), col("symbol"), col("seq"))
       .as[(String, Timestamp, Double, Double, Long)]
     val lastTs = ticks.agg(max(col("timestamp"))).collect()(0).getTimestamp(0).getTime
-    val g1Name = s"graft_stream_g1_${System.nanoTime}"
-    val g1In = MemoryStream[(String, Timestamp, Double, Double, Long)]
-    val g1Q = StreamingCandles.candles1s(
-        g1In.toDF().toDF("symbol", "timestamp", "price", "volume", "seq"))
-      .writeStream.format("memory").queryName(g1Name).outputMode("append").start()
-    try {
-      feedSorted(tickFeed) { sl => g1In.addData(sl); g1Q.processAllAvailable() }
-      // sentinel far past the end pushes the watermark over every real window
-      g1In.addData(Seq(("\u0000SENTINEL", new Timestamp(lastTs + 3600L * 1000), 1.0, 1.0, -1L)))
-      g1Q.processAllAvailable()
-    } finally g1Q.stop()
-    val streamG1 = spark.table(g1Name).filter(col("symbol") =!= "\u0000SENTINEL")
-    val (g1OnlyBatch, g1OnlyStream) = diffCounts(batchCandles, streamG1)
+    val (g1OnlyBatch, g1OnlyStream, nStreamG1) =
+      replay(spark, tickFeed)(StreamingCandles.candles1s(_)) {
+        // sentinel far past the end pushes the watermark over every real window
+        _.add(Seq(("\u0000SENTINEL", new Timestamp(lastTs + 3600L * 1000), 1.0, 1.0, -1L)))
+      }.consume { r =>
+        val streamG1 = r.output.filter(col("symbol") =!= "\u0000SENTINEL")
+        val (onlyBatch, onlyStream) = diffCounts(batchCandles, streamG1)
+        (onlyBatch, onlyStream, streamG1.count())
+      }
 
     // ---- H: stateful kernel pass over micro-batched candles
-    val candleFeed = batchCandles
-      .select(col("symbol"), col("timestamp"), col("open"), col("high"), col("low"), col("close"))
-      .orderBy(col("timestamp"), col("symbol"))
+    val ohlc = batchCandles.select(col("symbol"), col("timestamp"),
+      col("open"), col("high"), col("low"), col("close"))
+    val candleFeed = ohlc.orderBy(col("timestamp"), col("symbol"))
       .as[(String, Timestamp, Double, Double, Double, Double)]
-    val hName = s"graft_stream_h_${System.nanoTime}"
-    val hIn = MemoryStream[(String, Timestamp, Double, Double, Double, Double)]
     // patterns = true: the except-compare then covers all 86 columns — the
     // 20 indicator kernels AND the 59 CDL pattern rings — proving the
     // fused per-symbol state survives kryo state-store round-trips across
     // micro-batches, not just the indicator scalars
-    val hQ = StreamingIndicators.indicatorStream(
-        hIn.toDF().toDF("symbol", "timestamp", "open", "high", "low", "close"),
-        patterns = true)
-      .writeStream.format("memory").queryName(hName).outputMode("append").start()
-    try {
-      feedSorted(candleFeed) { sl => hIn.addData(sl); hQ.processAllAvailable() }
-    } finally hQ.stop()
-    val batchH = IndicatorPass.withIndicators(
-      batchCandles.select(col("symbol"), col("timestamp"),
-        col("open"), col("high"), col("low"), col("close")), patterns = true)
-    val (hOnlyBatch, hOnlyStream) = diffCounts(batchH, spark.table(hName))
+    val batchH = IndicatorPass.withIndicators(ohlc, patterns = true)
+    val (hOnlyBatch, hOnlyStream, nStreamH) =
+      replay(spark, candleFeed)(StreamingIndicators.indicatorStream(_, patterns = true))()
+        .consume { r =>
+          val (onlyBatch, onlyStream) = diffCounts(batchH, r.output)
+          (onlyBatch, onlyStream, r.output.count())
+        }
 
     val nCandles = batchCandles.count()
-    val nStreamG1 = streamG1.count()
-    val nStreamH = spark.table(hName).count()
     batchCandles.unpersist()
     Seq((nCandles, nStreamG1, g1OnlyBatch, g1OnlyStream,
       nCandles, nStreamH, hOnlyBatch, hOnlyStream))
@@ -157,42 +221,29 @@ object QueriesStreaming {
     val bounds = batchCandles.agg(min(col("timestamp")), max(col("timestamp"))).head()
     val mid = new Timestamp((bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_")
-    val inDir = s"$root/in"; val ckpt = s"$root/ckpt"; val sinkDir = s"$root/out"
+    val out = withScratch("graft_restart_") { root =>
+      val inDir = s"$root/in"; val sinkDir = s"$root/out"
+      def runUntilDrained(): Unit =
+        drainFiles(spark, batchCandles.schema, inDir, sinkDir, s"$root/ckpt")(
+          StreamingIndicators.indicatorStream(_, patterns = true))
 
-    def runUntilDrained(): Unit = {
-      val q = StreamingIndicators.indicatorStream(
-          spark.readStream.schema(batchCandles.schema).parquet(inDir), patterns = true)
-        .writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      // phase 1: first half of event time arrives, is processed, query STOPS
+      batchCandles.filter(col("timestamp") <= lit(mid)).write.mode("append").parquet(inDir)
+      runUntilDrained()
+      val nPre = spark.read.parquet(sinkDir).count()
+
+      // phase 2: the rest arrives; a NEW query resumes from the checkpoint
+      batchCandles.filter(col("timestamp") > lit(mid)).write.mode("append").parquet(inDir)
+      runUntilDrained()
+
+      val streamed = spark.read.parquet(sinkDir)
+      val batchH = IndicatorPass.withIndicators(batchCandles, patterns = true)
+      val (onlyBatch, onlyStream) = diffCounts(batchH, streamed)
+      Seq((batchCandles.count(), nPre, streamed.count(), onlyBatch, onlyStream))
+        .toDF("n_candles", "n_pre_restart", "n_stream", "only_batch", "only_stream")
     }
-
-    // phase 1: first half of event time arrives, is processed, query STOPS
-    batchCandles.filter(col("timestamp") <= lit(mid)).write.mode("append").parquet(inDir)
-    runUntilDrained()
-    val nPre = spark.read.parquet(sinkDir).count()
-
-    // phase 2: the rest arrives; a NEW query resumes from the checkpoint
-    batchCandles.filter(col("timestamp") > lit(mid)).write.mode("append").parquet(inDir)
-    runUntilDrained()
-
-    val streamed = spark.read.parquet(sinkDir)
-    val batchH = IndicatorPass.withIndicators(batchCandles, patterns = true)
-    val (onlyBatch, onlyStream) = diffCounts(batchH, streamed)
-    val nCandles = batchCandles.count()
-    val nStream = streamed.count()
     batchCandles.unpersist()
-    // all counts are materialized — the scratch dirs can go
-    def rmr(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    rmr(root)
-    Seq((nCandles, nPre, nStream, onlyBatch, onlyStream))
-      .toDF("n_candles", "n_pre_restart", "n_stream", "only_batch", "only_stream")
+    out
   }
 
   private val streamRestartEquivSql =
@@ -217,7 +268,6 @@ object QueriesStreaming {
     */
   private def streamLlmDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val docs = graft.core.Tables.documents(spark, dir)
     val kept = docs
@@ -236,24 +286,17 @@ object QueriesStreaming {
     // the sf1 sweep crawl). orderBy keeps the feed deterministic; batch
     // boundaries don't matter because the equivalence below compares
     // normalized-content SETS, which are boundary-independent.
-    val sliceSize = math.max(100L, math.min(8192L, docs.count() / 15)).toInt
-    val name = s"graft_stream_dedup_${System.nanoTime}"
-    val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingCorpus.dedupExactStream(
-        in.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      import scala.jdk.CollectionConverters._
-      docs.select(col("doc_id"), col("text")).orderBy("doc_id")
-        .as[(Long, String)].toLocalIterator().asScala
-        .grouped(sliceSize)
-        .foreach { sl => in.addData(sl.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val streamNorms = spark.table(name)
-      .select(graft.functions.TextOps.normalized(col("text")).as("norm"))
-
-    val (onlyBatch, onlyStream) = diffCounts(batchNorms, streamNorms)
-    Seq((batchNorms.count(), streamNorms.count(), onlyBatch, onlyStream))
+    val feed = docs.select(col("doc_id"), col("text")).orderBy("doc_id").as[(Long, String)]
+    val (nStream, onlyBatch, onlyStream) =
+      replay(spark, feed, slice = n => math.max(100L, math.min(8192L, n / 15)).toInt)(
+          graft.streaming.StreamingCorpus.dedupExactStream(_))()
+        .consume { r =>
+          val streamNorms = r.output
+            .select(graft.functions.TextOps.normalized(col("text")).as("norm"))
+          val (onlyBatch, onlyStream) = diffCounts(batchNorms, streamNorms)
+          (streamNorms.count(), onlyBatch, onlyStream)
+        }
+    Seq((batchNorms.count(), nStream, onlyBatch, onlyStream))
       .toDF("n_batch", "n_stream", "only_batch", "only_stream")
   }
 
@@ -293,16 +336,13 @@ object QueriesStreaming {
     */
   private def streamBigramLm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val batchScores = QueriesCorpus.bigramDocScores(spark, dir)
       .select(col("doc_id"), col("score"), col("n_oov"))
     val (uni, big, v) = QueriesCorpus.bigramModel(spark, dir)
     val bc = spark.sparkContext.broadcast((uni, big, v))
 
-    val name = s"graft_stream_lm_${System.nanoTime}"
-    val in = MemoryStream[(Long, String)]
-    val scored = in.toDF().toDF("doc_id", "text").as[(Long, String)]
+    def score(docs: DataFrame): DataFrame = docs.as[(Long, String)]
       .mapPartitions { it =>
         val (u, b, vv) = bc.value
         it.flatMap { case (docId, text) =>
@@ -327,19 +367,15 @@ object QueriesStreaming {
           }
         }
       }.toDF("doc_id", "score", "n_oov")
-    val q = scored.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      val docs = graft.core.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).orderBy("doc_id").as[(Long, String)]
-      feedSorted(docs) { sl => in.addData(sl); q.processAllAvailable() }
-    } finally q.stop()
-    val streamScores = spark.table(name)
-
-    val (onlyBatch, onlyStream) = diffCounts(batchScores, streamScores)
+    val docs = graft.core.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")).orderBy("doc_id").as[(Long, String)]
+    val (nStream, onlyBatch, onlyStream) = replay(spark, docs)(score)().consume { r =>
+      val (onlyBatch, onlyStream) = diffCounts(batchScores, r.output)
+      (r.output.count(), onlyBatch, onlyStream)
+    }
     val sumScore = batchScores.agg(sum(col("score"))).head().getLong(0)
     val out =
-      Seq((batchScores.count(), streamScores.count(), onlyBatch, onlyStream, sumScore))
+      Seq((batchScores.count(), nStream, onlyBatch, onlyStream, sumScore))
         .toDF("n_batch", "n_stream", "only_batch", "only_stream", "sum_score")
     // results are fully materialized above — release the model broadcast so
     // repeated harness runs don't pin model memory on executors
@@ -362,7 +398,6 @@ object QueriesStreaming {
     */
   private def streamBigramLmJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val batchScores = QueriesCorpus.bigramDocScores(spark, dir)
       .select(col("doc_id"), col("score"), col("n_oov"))
@@ -370,37 +405,27 @@ object QueriesStreaming {
       QueriesCorpus.bigramModelFrames(QueriesCorpus.tokenizedDocs(spark, dir))
     uni.persist(); big.persist(); vocab.persist()
 
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_lm_join")
-    val in = MemoryStream[(Long, String, String)]
-    val q = in.toDF().toDF("doc_id", "source", "text").writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
+    val docs = graft.core.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("source"), col("text")).orderBy("doc_id")
+      .as[(Long, String, String)]
+    // every read of outDir/model is eager (diffCounts/count below), so the
+    // local-Seq result frame survives the cleanup
+    val out = withScratch("graft_stream_lm_join") { outDir =>
+      replay(spark, docs, sink = _.foreachBatch { (b: DataFrame, _: Long) =>
         val toks = b.select(col("doc_id"), col("source"),
             split(graft.functions.TextOps.normalized(col("text")), " ").as("toks"))
           .filter(size(col("toks")) >= 2)
         QueriesCorpus.scoreAgainstModel(toks, uni, big, vocab)
           .select(col("doc_id"), col("score"), col("n_oov"))
-          .write.mode("append").parquet(outDir.toString)
-      }
-      .start()
-    try {
-      val docs = graft.core.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text")).orderBy("doc_id")
-        .as[(Long, String, String)]
-      feedSorted(docs) { sl => in.addData(sl); q.processAllAvailable() }
-    } finally q.stop()
-    val streamScores = spark.read.parquet(outDir.toString)
-
-    val (onlyBatch, onlyStream) = diffCounts(batchScores, streamScores)
-    val sumScore = batchScores.agg(sum(col("score"))).head().getLong(0)
-    // every read of outDir/model is eager (diffCounts/count above), so the
-    // local-Seq result frame survives the cleanup below
-    val out =
+          .write.mode("append").parquet(outDir)
+      })(identity)()
+      val streamScores = spark.read.parquet(outDir)
+      val (onlyBatch, onlyStream) = diffCounts(batchScores, streamScores)
+      val sumScore = batchScores.agg(sum(col("score"))).head().getLong(0)
       Seq((batchScores.count(), streamScores.count(), onlyBatch, onlyStream, sumScore))
         .toDF("n_batch", "n_stream", "only_batch", "only_stream", "sum_score")
+    }
     uni.unpersist(); big.unpersist(); vocab.unpersist()
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(outDir).iterator().asScala.toSeq.reverse
-      .foreach(f => java.nio.file.Files.deleteIfExists(f))
     out
   }
 
@@ -453,42 +478,45 @@ object QueriesStreaming {
     */
   private def streamLlmDedupWm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (nBase, nEmitted, _) = dedupReadmission(spark, dir)
+    Seq((nBase, nEmitted, nEmitted - nBase - 1))
+      .toDF("n_base", "n_emitted", "n_readmitted")
+  }
 
-    val docs = graft.core.Tables.documents(spark, dir)
-      .filter(col("doc_id") < 50)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
+  /** The readmission probe behind `stream_llm_dedup_wm` and
+    * `stream_state_bounds`: the doc_id < 50 docs arrive at T0 in one
+    * micro-batch, a sentinel doc at T1 advances the watermark past
+    * T0 + delay, then the lowest-id batch-1 survivor's text arrives again
+    * at T1. Returns (n_base = batch-1 survivors, n_emitted, state rows per
+    * micro-batch).
+    */
+  private def dedupReadmission(spark: SparkSession, dir: String): (Long, Long, Seq[Long]) = {
+    import spark.implicits._
     val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
     val t1 = Timestamp.valueOf("2024-01-01 11:00:00")
     // outside the corpus vocabulary (TESTDATA words are spark-ish), passes
     // the quality gate via its English stopwords
     val sentinel = "the quick brown fox jumps over the lazy dog in the morning"
+    val docs = graft.core.Tables.documents(spark, dir)
+      .filter(col("doc_id") < 50)
+      .select(col("doc_id"), col("text"), lit(t0).as("arrival_ts"))
+      .orderBy("doc_id").as[(Long, String, Timestamp)]
 
-    val name = s"graft_stream_dedup_wm_${System.nanoTime}"
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = graft.streaming.StreamingCorpus.dedupExactStreamBounded(
-        in.toDF().toDF("doc_id", "text", "arrival_ts"), delay = "10 minutes")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    val (nBase, nEmitted) = try {
-      in.addData(docs.map { case (id, t) => (id, t, t0) })
-      q.processAllAvailable()
-      val base = spark.table(name).select(col("doc_id"), col("text")).collect()
+    replay(spark, docs, slice = n => math.max(1L, n).toInt)(
+        graft.streaming.StreamingCorpus.dedupExactStreamBounded(_, delay = "10 minutes")) { r =>
+      val base = r.output.select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      require(base.nonEmpty, "no doc_id<50 document passed the 0.3 quality " +
+        "gate at this SF/corpus — the readmission probe needs at least one " +
+        "batch-1 survivor")
       // batch 2: sentinel advances the watermark to T1 - delay > T0 + delay
-      in.addData(Seq((-1L, sentinel, t1)))
-      q.processAllAvailable()
+      r.add(Seq((-1L, sentinel, t1)))
       // batch 3: duplicate of the lowest-id survivor, FRESH arrival time;
       // its norm's state expired at T0 + delay < watermark -> readmitted
-      require(base.nonEmpty, "stream_llm_dedup_wm: no doc_id<50 document " +
-        "passed the 0.3 quality gate at this SF/corpus — the readmission " +
-        "probe needs at least one batch-1 survivor")
-      val dup = base.map(r => (r.getLong(0), r.getString(1))).minBy(_._1)
-      in.addData(Seq((dup._1 + 100000L, dup._2, t1)))
-      q.processAllAvailable()
-      (base.length.toLong, spark.table(name).count())
-    } finally q.stop()
-    Seq((nBase, nEmitted, nEmitted - nBase - 1))
-      .toDF("n_base", "n_emitted", "n_readmitted")
+      val (id, text) = base.minBy(_._1)
+      r.add(Seq((id + 100000L, text, t1)))
+    }.consume { r =>
+      (r.output.filter(col("arrival_ts") === lit(t0)).count(), r.output.count(), r.stateRows)
+    }
   }
 
   /** Replays n_base (distinct normalized contents among gated docs with
@@ -530,7 +558,6 @@ object QueriesStreaming {
     */
   private def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val docs = graft.core.Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -551,23 +578,17 @@ object QueriesStreaming {
       .join(corpusFp, Seq("__fp"), "left_anti")
       .select(graft.functions.TextOps.normalized(col("text")).as("norm")).distinct()
 
-    val sliceSize = math.max(100L, math.min(8192L, batch.count() / 5)).toInt
-    val name = s"graft_stream_incdedup_${System.nanoTime}"
-    val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingCorpus.admitIncrementalStreamCatalog(
-        in.toDF().toDF("doc_id", "text"), fpTable)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      import scala.jdk.CollectionConverters._
-      batch.orderBy("doc_id").as[(Long, String)].toLocalIterator().asScala
-        .grouped(sliceSize)
-        .foreach { sl => in.addData(sl.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val streamNorms = spark.table(name)
-      .select(graft.functions.TextOps.normalized(col("text")).as("norm"))
-
-    val (onlyBatch, onlyStream) = diffCounts(batchNorms, streamNorms)
-    Seq((batchNorms.count(), streamNorms.count(), onlyBatch, onlyStream))
+    val (nStream, onlyBatch, onlyStream) =
+      replay(spark, batch.orderBy("doc_id").as[(Long, String)],
+          slice = n => math.max(100L, math.min(8192L, n / 5)).toInt)(
+          graft.streaming.StreamingCorpus.admitIncrementalStreamCatalog(_, fpTable))()
+        .consume { r =>
+          val streamNorms = r.output
+            .select(graft.functions.TextOps.normalized(col("text")).as("norm"))
+          val (onlyBatch, onlyStream) = diffCounts(batchNorms, streamNorms)
+          (streamNorms.count(), onlyBatch, onlyStream)
+        }
+    Seq((batchNorms.count(), nStream, onlyBatch, onlyStream))
       .toDF("n_batch", "n_stream", "only_batch", "only_stream")
   }
 
@@ -594,38 +615,36 @@ object QueriesStreaming {
     * drift — turns the row red. Final-chunk flush via one far-future
     * sentinel row per symbol (next chunk; contributes no output row).
     */
-  private def streamAnchoredVwap(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+  private def streamAnchoredVwap(spark: SparkSession, dir: String): DataFrame =
+    anchoredVwapReplay(spark, dir)(StreamingAnchoredVwap.anchoredVwapStream(_)) { candles =>
+      candles.groupBy(col("symbol"))
+        .agg(max(col("timestamp")).as("mx"))
+        .collect()
+        .map(r => (r.getString(0),
+          new Timestamp(r.getTimestamp(1).getTime + 31L * 86400 * 1000), 1.0, 1.0))
+        .toSeq
+    }
 
+  /** Both anchored-VWAP rows: the sf candles in event-time order through
+    * `operator`, then the flush rows `tail(candles)` builds; rows of the
+    * `\u0000`-prefixed barrier symbol are dropped from the output.
+    */
+  private def anchoredVwapReplay(spark: SparkSession, dir: String)(
+      operator: DataFrame => DataFrame)(
+      tail: DataFrame => Seq[(String, Timestamp, Double, Double)]): DataFrame = {
+    import spark.implicits._
     val candles = CandleAggregator.aggregate(graft.core.Tables.ticks(spark, dir))
     val feed = candles
       .select(col("symbol"), col("timestamp"), col("close"), col("volume"))
       .orderBy(col("timestamp"), col("symbol"))
       .as[(String, Timestamp, Double, Double)]
-    val sentinels = candles.groupBy(col("symbol"))
-      .agg(max(col("timestamp")).as("mx"))
-      .collect()
-      .map(r => (r.getString(0),
-        new Timestamp(r.getTimestamp(1).getTime + 31L * 86400 * 1000), 1.0, 1.0))
-      .toSeq
-
-    val name = s"graft_stream_avwap_${System.nanoTime}"
-    val in = MemoryStream[(String, Timestamp, Double, Double)]
-    val q = graft.streaming.StreamingAnchoredVwap.anchoredVwapStream(
-        in.toDF().toDF("symbol", "timestamp", "close", "volume"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      feedSorted(feed) { sl => in.addData(sl); q.processAllAvailable() }
-      in.addData(sentinels)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).select(
-      col("symbol"), col("timeframe"), col("anchor_type"),
-      tsMicros(col("anchor_timestamp")).as("anchor_timestamp"),
-      col("anchor_idx"), col("price_at_anchor"),
-      tsMicros(col("current_snapshot_timestamp")).as("current_snapshot_timestamp"),
-      col("current_idx"), col("anchored_vwap"))
+    replay(spark, feed)(operator)(_.add(tail(candles)))
+      .output.filter(!col("symbol").startsWith("\u0000")).select(
+        col("symbol"), col("timeframe"), col("anchor_type"),
+        tsMicros(col("anchor_timestamp")).as("anchor_timestamp"),
+        col("anchor_idx"), col("price_at_anchor"),
+        tsMicros(col("current_snapshot_timestamp")).as("current_snapshot_timestamp"),
+        col("current_idx"), col("anchored_vwap"))
   }
 
   private val streamAnchoredVwapSql =
@@ -663,48 +682,24 @@ object QueriesStreaming {
     * timer-flush-TWS row-for-row.
     */
   private def streamAnchoredVwapTws(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val candles = CandleAggregator.aggregate(graft.core.Tables.ticks(spark, dir))
-    val feed = candles
-      .select(col("symbol"), col("timestamp"), col("close"), col("volume"))
-      .orderBy(col("timestamp"), col("symbol"))
-      .as[(String, Timestamp, Double, Double)]
-    val maxTs = candles.agg(max(col("timestamp"))).head().getTimestamp(0)
-    // one barrier row TOTAL: its only job is pushing the global watermark
-    // past every real chunk-end boundary so all pending timers fire
-    val barrier = ("\u0000WM", new Timestamp(maxTs.getTime +
-      graft.calc.AnchorSnapshots.chunkUs() / 1000L + 3600L * 1000L), 1.0, 1.0)
-
-    val name = s"graft_stream_avwap_tws_${System.nanoTime}"
-    val in = MemoryStream[(String, Timestamp, Double, Double)]
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = graft.streaming.StreamingAnchoredVwapTws.anchoredVwapStream(
-          in.toDF().toDF("symbol", "timestamp", "close", "volume")
-            .withWatermark("timestamp", "10 seconds"))
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        feedSorted(feed) { sl => in.addData(sl); q.processAllAvailable() }
-        in.addData(Seq(barrier))
-        q.processAllAvailable()
-      } finally q.stop()
+    try anchoredVwapReplay(spark, dir)(in =>
+        graft.streaming.StreamingAnchoredVwapTws.anchoredVwapStream(
+          in.withWatermark("timestamp", "10 seconds"))) { candles =>
+      val maxTs = candles.agg(max(col("timestamp"))).head().getTimestamp(0)
+      // one barrier row TOTAL: its only job is pushing the global watermark
+      // past every real chunk-end boundary so all pending timers fire
+      Seq(("\u0000WM", new Timestamp(maxTs.getTime +
+        graft.calc.AnchorSnapshots.chunkUs() / 1000L + 3600L * 1000L), 1.0, 1.0))
     } finally {
       prevProvider match {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
     }
-    spark.table(name).filter(col("symbol") =!= "\u0000WM").select(
-      col("symbol"), col("timeframe"), col("anchor_type"),
-      tsMicros(col("anchor_timestamp")).as("anchor_timestamp"),
-      col("anchor_idx"), col("price_at_anchor"),
-      tsMicros(col("current_snapshot_timestamp")).as("current_snapshot_timestamp"),
-      col("current_idx"), col("anchored_vwap"))
   }
 
   /** Streaming HLL distinct-count ([[graft.streaming.StreamingSketch]]):
@@ -716,27 +711,17 @@ object QueriesStreaming {
     */
   private def streamHllDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val ev = graft.core.Tables.events(spark, dir)
       .select(col("event_type"), col("user_id").cast("long").as("user_id"))
-    val feed = ev.orderBy(col("event_type"), col("user_id")).as[(String, Long)]
-    val types = ev.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).toSeq // bounded: one sentinel per group
-
-    val name = s"graft_stream_hll_${System.nanoTime}"
-    val in = MemoryStream[(String, Long, Boolean)]
-    val q = graft.streaming.StreamingSketch.hllDistinctStream(
-        in.toDF().toDF("event_type", "user_id", "is_sentinel"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      feedSorted(feed) { sl => in.addData(sl.map { case (t, u) => (t, u, false) }); q.processAllAvailable() }
-      in.addData(types.map(t => (t, 0L, true)))
-      q.processAllAvailable()
-    } finally q.stop()
+    val feed = ev.withColumn("is_sentinel", lit(false))
+      .orderBy(col("event_type"), col("user_id")).as[(String, Long, Boolean)]
+    val types = eventTypes(ev)
+    val out = replay(spark, feed)(StreamingSketch.hllDistinctStream)(
+      _.add(types.map(t => (t, 0L, true)))).output
 
     val exact = ev.groupBy(col("event_type")).agg(countDistinct(col("user_id")).as("n_exact"))
-    spark.table(name).join(exact, "event_type")
+    out.join(exact, "event_type")
       .select(col("event_type"), col("n_exact"), col("v_zero"), col("hll_raw"), col("hll_est"))
       .withColumn("err_pct",
         (col("hll_est") - col("n_exact")).cast("double") * lit(100.0) / col("n_exact").cast("double"))
@@ -750,33 +735,21 @@ object QueriesStreaming {
     */
   private def streamHistQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.types.DecimalType
 
     val ev = graft.core.Tables.events(spark, dir)
       .select(col("event_type"), col("value"), col("event_id"),
         (col("value").cast(DecimalType(12, 2)) * 100).cast("long").as("cents"))
-    val feed = ev.select(col("event_type"), col("cents"))
-      .orderBy(col("event_type"), col("cents")).as[(String, Long)]
-    val types = ev.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).toSeq
-
-    val name = s"graft_stream_hq_${System.nanoTime}"
-    val in = MemoryStream[(String, Long, Boolean)]
-    val q = graft.streaming.StreamingSketch.histQuantileStream(
-        in.toDF().toDF("event_type", "cents", "is_sentinel"), Seq(500, 950, 990))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      feedSorted(feed) { sl => in.addData(sl.map { case (t, c) => (t, c, false) }); q.processAllAvailable() }
-      in.addData(types.map(t => (t, 0L, true)))
-      q.processAllAvailable()
-    } finally q.stop()
+    val feed = ev.select(col("event_type"), col("cents"), lit(false).as("is_sentinel"))
+      .orderBy(col("event_type"), col("cents")).as[(String, Long, Boolean)]
+    val types = eventTypes(ev)
+    val est = replay(spark, feed)(StreamingSketch.histQuantileStream(_, Seq(500, 950, 990)))(
+      _.add(types.map(t => (t, 0L, true)))).output
 
     val wv = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
     val ranked = ev.select(col("event_type"), col("value"), col("event_id"))
       .withColumn("rn", row_number().over(wv))
-    val est = spark.table(name)
     est.join(ranked, Seq("event_type"))
       .filter(col("rn") === col("rank_q"))
       .select(col("event_type"), col("q"), col("n"), col("rank_q"),
@@ -797,7 +770,6 @@ object QueriesStreaming {
     */
   private def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val ev = graft.core.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -805,23 +777,17 @@ object QueriesStreaming {
     val feed = ev.orderBy(col("ts"), col("event_id"))
       .as[(Long, Timestamp, Long, String)]
 
-    val name = s"graft_stream_ssj_${System.nanoTime}"
-    val in = MemoryStream[(Long, Timestamp, Long, String)]
-    val s = in.toDF().toDF("event_id", "ts", "user_id", "event_type")
-    val purchases = s.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("ts").as("p_ts"), col("user_id").as("p_user"))
-      .withWatermark("p_ts", "2 hours")
-    val clicks = s.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("ts").as("c_ts"), col("user_id").as("c_user"))
-      .withWatermark("c_ts", "2 hours")
-    val q = purchases.join(clicks,
-        expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"))
-      .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      feedSorted(feed) { sl => in.addData(sl); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(name)
+    replay(spark, feed) { s =>
+      val purchases = s.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("ts").as("p_ts"), col("user_id").as("p_user"))
+        .withWatermark("p_ts", "2 hours")
+      val clicks = s.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("ts").as("c_ts"), col("user_id").as("c_user"))
+        .withWatermark("c_ts", "2 hours")
+      purchases.join(clicks,
+          expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"))
+        .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
+    }().output
   }
 
   private val streamStreamJoinSql =
@@ -832,52 +798,25 @@ object QueriesStreaming {
       | AND c.ts::TIMESTAMP BETWEEN p.ts::TIMESTAMP - INTERVAL 1 HOUR
       |                         AND p.ts::TIMESTAMP""".stripMargin
 
-  /** Streaming per-group top-k: the state IS the batch
-    * [[graft.operators.TopKAggregator]] buffer — every arriving row passes
-    * through the aggregator's own `reduce`, so batch ≡ stream holds by
-    * construction (one ordering implementation, two execution modes) and
-    * the emitted rows hash-match q14's oracle. State is ≤ k pairs per
-    * group, the streaming analog of the map-side-combine bound. An
-    * explicit sentinel flag (not an in-band id value — real event_ids of
-    * any sign enter the buffer) triggers ranked emission.
+  /** Streaming per-group top-k ([[StreamingSketch.topKStream]], k = 3):
+    * the state IS the batch [[graft.operators.TopKAggregator]] buffer, so
+    * the emitted rows hash-match q14's oracle.
     */
-  private def streamTopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+  private def streamTopK(spark: SparkSession, dir: String): DataFrame =
+    topKReplay(spark, dir).output
 
+  /** The top-k replay behind `stream_topk` and `stream_state_bounds`:
+    * every event in event_id order, then one flush sentinel per type.
+    */
+  private def topKReplay(spark: SparkSession, dir: String): Replay[(String, Double, Long, Boolean)] = {
+    import spark.implicits._
     val ev = graft.core.Tables.events(spark, dir)
       .select(col("event_type"), col("value"), col("event_id"))
-    val feed = ev.orderBy(col("event_id")).as[(String, Double, Long)]
-    val types = ev.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).toSeq
-
-    val agg = graft.operators.TopKAggregator(3)
-    val name = s"graft_stream_topk_${System.nanoTime}"
-    val in = MemoryStream[(String, Double, Long, Boolean)]
-    val q = in.toDS()
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Vector[(Double, Long)], (String, Int, Double, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Double, Long, Boolean)],
-         state: org.apache.spark.sql.streaming.GroupState[Vector[(Double, Long)]]) =>
-          var buf = state.getOption.getOrElse(agg.zero)
-          var emit = false
-          rows.foreach { case (_, v, id, sentinel) =>
-            if (sentinel) emit = true else buf = agg.reduce(buf, (v, id))
-          }
-          state.update(buf)
-          if (!emit) Iterator.empty
-          else buf.iterator.zipWithIndex.map { case ((v, id), i) => (key, i + 1, v, id) }
-      }
-      .toDF("event_type", "rank", "value", "event_id")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      feedSorted(feed) { sl => in.addData(sl.map { case (t, v, id) => (t, v, id, false) }); q.processAllAvailable() }
-      in.addData(types.map(t => (t, 0.0, 0L, true)))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name)
+    val feed = ev.withColumn("is_sentinel", lit(false))
+      .orderBy(col("event_id")).as[(String, Double, Long, Boolean)]
+    val types = eventTypes(ev)
+    replay(spark, feed)(StreamingSketch.topKStream(_, 3))(
+      _.add(types.map(t => (t, 0.0, 0L, true))))
   }
 
   /** Bounded-state PROOF for the streaming sketches — the state-store
@@ -908,104 +847,41 @@ object QueriesStreaming {
     */
   private def streamStateBounds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    def stateTotals(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] =
-      q.recentProgress.toSeq.flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
 
     // ---- HLL through file source + checkpoint, restarted twice ----
     val ev = graft.core.Tables.events(spark, dir)
       .select(col("event_type"), col("user_id").cast("long").as("user_id"))
-    val nTypes = ev.select(col("event_type")).distinct().count()
-    val types = ev.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft_state_")
-    val inDir = s"$root/in"; val ckpt = s"$root/ckpt"; val sinkDir = s"$root/out"
+    val types = eventTypes(ev)
+    val nTypes = types.size.toLong
     val feedDf = ev.withColumn("is_sentinel", lit(false))
-    def runPhase(): Seq[Long] = {
-      val src = spark.readStream.schema(feedDf.schema).parquet(inDir)
-      val q = graft.streaming.StreamingSketch.hllDistinctStream(src)
-        .writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try { q.processAllAvailable(); stateTotals(q) } finally q.stop()
+    val (hllAll, hllRowsOut) = withScratch("graft_state_") { root =>
+      val inDir = s"$root/in"; val sinkDir = s"$root/out"
+      def runPhase(): Seq[Long] =
+        drainFiles(spark, feedDf.schema, inDir, sinkDir, s"$root/ckpt")(
+          StreamingSketch.hllDistinctStream)
+      feedDf.filter(pmod(col("user_id"), lit(2)) === 0).write.mode("append").parquet(inDir)
+      val p1 = runPhase() // phase 1: half the users, then STOP
+      feedDf.filter(pmod(col("user_id"), lit(2)) === 1).write.mode("append").parquet(inDir)
+      val p2 = runPhase() // phase 2: resume from checkpoint, rest arrives, STOP
+      types.map(t => (t, 0L, true)).toDF("event_type", "user_id", "is_sentinel")
+        .write.mode("append").parquet(inDir)
+      val p3 = runPhase() // phase 3: resume again, sentinels flush
+      (p1 ++ p2 ++ p3, spark.read.parquet(sinkDir).count())
     }
-    feedDf.filter(pmod(col("user_id"), lit(2)) === 0).write.mode("append").parquet(inDir)
-    val p1 = runPhase() // phase 1: half the users, then STOP
-    feedDf.filter(pmod(col("user_id"), lit(2)) === 1).write.mode("append").parquet(inDir)
-    val p2 = runPhase() // phase 2: resume from checkpoint, rest arrives, STOP
-    types.map(t => (t, 0L, true)).toDF("event_type", "user_id", "is_sentinel")
-      .write.mode("append").parquet(inDir)
-    val p3 = runPhase() // phase 3: resume again, sentinels flush
-    val hllAll = p1 ++ p2 ++ p3
     require(hllAll.nonEmpty && hllAll.forall(_ <= nTypes),
       s"HLL state rows must stay <= $nTypes on every batch, got $hllAll")
     val hllStateRows = hllAll.last
-    val hllRowsOut = spark.read.parquet(sinkDir).count()
 
     // ---- top-k: one state row per group, bounded every batch ----
-    val evk = graft.core.Tables.events(spark, dir)
-      .select(col("event_type"), col("value"), col("event_id"))
-    val feedK = evk.orderBy(col("event_id")).as[(String, Double, Long)]
-    val agg = graft.operators.TopKAggregator(3)
-    val nameK = s"graft_state_topk_${System.nanoTime}"
-    val inK = MemoryStream[(String, Double, Long, Boolean)]
-    val qK = inK.toDS()
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Vector[(Double, Long)], (String, Int, Double, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Double, Long, Boolean)],
-         state: org.apache.spark.sql.streaming.GroupState[Vector[(Double, Long)]]) =>
-          var buf = state.getOption.getOrElse(agg.zero)
-          var emit = false
-          rows.foreach { case (_, v, id, sentinel) =>
-            if (sentinel) emit = true else buf = agg.reduce(buf, (v, id))
-          }
-          state.update(buf)
-          if (!emit) Iterator.empty
-          else buf.iterator.zipWithIndex.map { case ((v, id), i) => (key, i + 1, v, id) }
-      }
-      .toDF("event_type", "rank", "value", "event_id")
-      .writeStream.format("memory").queryName(nameK).outputMode("append").start()
-    val topkTotals = try {
-      feedSorted(feedK) { sl => inK.addData(sl.map { case (t, v, id) => (t, v, id, false) }); qK.processAllAvailable() }
-      inK.addData(types.map(t => (t, 0.0, 0L, true)))
-      qK.processAllAvailable()
-      stateTotals(qK)
-    } finally qK.stop()
+    val topkTotals = topKReplay(spark, dir).consume(_.stateRows)
     require(topkTotals.nonEmpty && topkTotals.forall(_ <= nTypes),
       s"top-k state rows must stay <= $nTypes on every batch, got $topkTotals")
     val topkStateRows = topkTotals.last
 
     // ---- watermarked dedup: growth, then measured eviction ----
-    val docs = graft.core.Tables.documents(spark, dir)
-      .filter(col("doc_id") < 50)
-      .select(col("doc_id"), col("text"))
-      .collect().sortBy(_.getLong(0)).map(r => (r.getLong(0), r.getString(1))).toSeq
-    val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
-    val t1 = Timestamp.valueOf("2024-01-01 11:00:00")
-    val sentinel = "the quick brown fox jumps over the lazy dog in the morning"
-    val nameD = s"graft_state_dedup_${System.nanoTime}"
-    val inD = MemoryStream[(Long, String, Timestamp)]
-    val qD = graft.streaming.StreamingCorpus.dedupExactStreamBounded(
-        inD.toDF().toDF("doc_id", "text", "arrival_ts"), delay = "10 minutes")
-      .writeStream.format("memory").queryName(nameD).outputMode("append").start()
-    val (dedupMax, dedupFinal) = try {
-      inD.addData(docs.map { case (id, t) => (id, t, t0) })
-      qD.processAllAvailable()
-      val base = spark.table(nameD).select(col("doc_id"), col("text")).collect()
-      require(base.nonEmpty, "stream_state_bounds: need >= 1 batch-1 survivor")
-      inD.addData(Seq((-1L, sentinel, t1)))
-      qD.processAllAvailable()
-      val dup = base.map(r => (r.getLong(0), r.getString(1))).minBy(_._1)
-      inD.addData(Seq((dup._1 + 100000L, dup._2, t1)))
-      qD.processAllAvailable()
-      val totals = stateTotals(qD)
-      (totals.max, totals.last)
-    } finally qD.stop()
+    val (_, _, dedupTotals) = dedupReadmission(spark, dir)
 
-    Seq((hllStateRows, hllRowsOut, topkStateRows, dedupMax, dedupFinal))
+    Seq((hllStateRows, hllRowsOut, topkStateRows, dedupTotals.max, dedupTotals.last))
       .toDF("hll_state_rows", "hll_rows_out", "topk_state_rows",
         "dedup_state_max", "dedup_state_final")
   }
@@ -1124,93 +1000,67 @@ object QueriesStreaming {
     val wmUs = sUs + (t2min - sUs) / 2 / 1000L * 1000L
     require(wmUs > sUs && wmUs < t2min, "stream_pipeline_full: watermark gap degenerate")
 
-    def usTs(us: Long): Timestamp = {
-      val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
-    }
-
-    val root = java.nio.file.Files.createTempDirectory("graft_spipe_")
-    val inDir = s"$root/in"
-    val out1 = s"$root/candles"; val out2 = s"$root/hrows"; val out3 = s"$root/anchors"
     val Bar = "\u0000BARRIER"
     val delayUs = 10L * 1000000L // the 10-second default of both hop-1 operators
 
-    def runHop1(): Unit = {
-      val src = spark.readStream.schema(ticksAll.schema).parquet(inDir)
-      val q = StreamingCandles.dedupedCandles1s(
-          src.filter(graft.operators.TickOps.tickValidity))
-        .writeStream.format("parquet").option("path", out1)
-        .option("checkpointLocation", s"$root/ckpt1").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+    val out = withScratch("graft_spipe_") { root =>
+      val inDir = s"$root/in"
+      val out1 = s"$root/candles"; val out2 = s"$root/hrows"; val out3 = s"$root/anchors"
+      def runHops(): Unit = {
+        drainFiles(spark, ticksAll.schema, inDir, out1, s"$root/ckpt1")(src =>
+          StreamingCandles.dedupedCandles1s(src.filter(graft.operators.TickOps.tickValidity)))
+        drainFiles(spark, batchCandles.schema, out1, out2, s"$root/ckpt2")(src =>
+          StreamingIndicators.indicatorStream(
+            src.select("symbol", "timestamp", "open", "high", "low", "close"), patterns = true))
+        drainFiles(spark, batchCandles.schema, out1, out3, s"$root/ckpt3")(src =>
+          StreamingAnchoredVwap.anchoredVwapStream(
+            src.select("symbol", "timestamp", "close", "volume")))
+      }
+
+      // phase 1: ticks before S (nulls included — the in-stream P1 filter
+      // does the real work), then the barrier watermark advance; run + STOP
+      // each hop
+      ticksAll.filter(col("timestamp").isNull || unix_micros(col("timestamp")) < sUs)
+        .write.mode("append").parquet(inDir)
+      Seq((Bar, usTs(wmUs + delayUs), 1.0, 1.0, -1L))
+        .toDF(tickCols: _*).write.mode("append").parquet(inDir)
+      runHops()
+      val nPre = spark.read.parquet(out2).count()
+
+      // phase 2: the rest + flush sentinels; every hop RESUMES from its
+      // checkpoint
+      ticksAll.filter(unix_micros(col("timestamp")) >= sUs)
+        .write.mode("append").parquet(inDir)
+      val s1Us = maxUs + graft.calc.AnchorSnapshots.chunkUs()
+      // bounded collect: one flush sentinel per symbol
+      val symbols = batchCandles.select(col("symbol")).distinct().as[String].collect().toSeq
+      (symbols.map(sym => (sym, usTs(s1Us), 1.0, 1.0, -1L)) :+
+          (Bar, usTs(s1Us + 3600L * 1000000L), 1.0, 1.0, -2L))
+        .toDF(tickCols: _*).write.mode("append").parquet(inDir)
+      runHops()
+
+      // ---- composed compare
+      val streamH = spark.read.parquet(out2)
+        .filter(col("symbol") =!= Bar && unix_micros(col("timestamp")) <= maxUs)
+        .select(col("symbol") +: col("timestamp") +: hCols: _*)
+      val streamAnchorCounts = spark.read.parquet(out3)
+        .filter(col("symbol") =!= Bar)
+        .groupBy(col("symbol"), col("anchor_timestamp"))
+        .agg(count(lit(1)).as("n_anchors"))
+        .withColumnRenamed("anchor_timestamp", "timestamp")
+      val streamComposed = streamH.join(streamAnchorCounts, Seq("symbol", "timestamp"), "left")
+        .withColumn("n_anchors", coalesce(col("n_anchors"), lit(0L)))
+
+      val (onlyBatch, onlyStream) = diffCounts(batchComposed, streamComposed)
+      val nStream = streamComposed.count()
+      Seq((batchCandles.count(), nStream, onlyBatch, onlyStream, batchTrigAnchors.count(),
+          nPre > 0 && nPre < nStream))
+        .toDF("n_candles", "n_stream", "only_batch", "only_stream",
+          "n_anchor_points", "pre_split_ok")
     }
-    def runHop2(): Unit = {
-      val src = spark.readStream.schema(batchCandles.schema).parquet(out1)
-        .select("symbol", "timestamp", "open", "high", "low", "close")
-      val q = StreamingIndicators.indicatorStream(src, patterns = true)
-        .writeStream.format("parquet").option("path", out2)
-        .option("checkpointLocation", s"$root/ckpt2").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    def runHop3(): Unit = {
-      val src = spark.readStream.schema(batchCandles.schema).parquet(out1)
-        .select("symbol", "timestamp", "close", "volume")
-      val q = graft.streaming.StreamingAnchoredVwap.anchoredVwapStream(src)
-        .writeStream.format("parquet").option("path", out3)
-        .option("checkpointLocation", s"$root/ckpt3").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    // phase 1: ticks before S (nulls included — the in-stream P1 filter
-    // does the real work), then the barrier watermark advance; run + STOP
-    // each hop
-    ticksAll.filter(col("timestamp").isNull || unix_micros(col("timestamp")) < sUs)
-      .write.mode("append").parquet(inDir)
-    Seq((Bar, usTs(wmUs + delayUs), 1.0, 1.0, -1L))
-      .toDF(tickCols: _*).write.mode("append").parquet(inDir)
-    runHop1(); runHop2(); runHop3()
-    val nPre = spark.read.parquet(out2).count()
-
-    // phase 2: the rest + flush sentinels; every hop RESUMES from its
-    // checkpoint
-    ticksAll.filter(unix_micros(col("timestamp")) >= sUs)
-      .write.mode("append").parquet(inDir)
-    val s1Us = maxUs + graft.calc.AnchorSnapshots.chunkUs()
-    // bounded collect: one flush sentinel per symbol
-    val symbols = batchCandles.select(col("symbol")).distinct().as[String].collect().toSeq
-    (symbols.map(sym => (sym, usTs(s1Us), 1.0, 1.0, -1L)) :+
-        (Bar, usTs(s1Us + 3600L * 1000000L), 1.0, 1.0, -2L))
-      .toDF(tickCols: _*).write.mode("append").parquet(inDir)
-    runHop1(); runHop2(); runHop3()
-
-    // ---- composed compare
-    val streamH = spark.read.parquet(out2)
-      .filter(col("symbol") =!= Bar && unix_micros(col("timestamp")) <= maxUs)
-      .select(col("symbol") +: col("timestamp") +: hCols: _*)
-    val streamAnchorCounts = spark.read.parquet(out3)
-      .filter(col("symbol") =!= Bar)
-      .groupBy(col("symbol"), col("anchor_timestamp"))
-      .agg(count(lit(1)).as("n_anchors"))
-      .withColumnRenamed("anchor_timestamp", "timestamp")
-    val streamComposed = streamH.join(streamAnchorCounts, Seq("symbol", "timestamp"), "left")
-      .withColumn("n_anchors", coalesce(col("n_anchors"), lit(0L)))
-
-    val (onlyBatch, onlyStream) = diffCounts(batchComposed, streamComposed)
-    val nCandles = batchCandles.count()
-    val nStream = streamComposed.count()
-    val nAnchorPoints = batchTrigAnchors.count()
     batchTrigAnchors.unpersist()
     batchCandles.unpersist()
-    def rmr(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    rmr(root)
-    Seq((nCandles, nStream, onlyBatch, onlyStream, nAnchorPoints,
-        nPre > 0 && nPre < nStream))
-      .toDF("n_candles", "n_stream", "only_batch", "only_stream",
-        "n_anchor_points", "pre_split_ok")
+    out
   }
 
   /** Replays the composed counts from the tables: pipeline candles

@@ -1,9 +1,5 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-import java.sql.Timestamp
-import java.time.{Instant, ZoneId}
-
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
@@ -36,106 +32,36 @@ import graft.calc.AnchorSnapshots
   * State is a SQL-encodable product (scale-6 decimal sums — exact under
   * DecimalType(38,18), matching the batch decimal discipline) because
   * `transformWithState` state rides the RocksDB store through Spark's
-  * encoder framework, not kryo.
+  * encoder framework, not kryo. The state type, the per-row step and the
+  * flush are [[StreamingAnchoredVwap.VwapStep]]'s; only the flush trigger
+  * differs.
   */
 object StreamingAnchoredVwapTws {
 
-  private val NY = ZoneId.of("America/New_York")
-
-  final case class TwsAnchor(anchorType: String, tsUs: Long, cidx: Long,
-                             price: Double, prePv: BigDecimal, preV: BigDecimal)
-
-  final case class TwsVwapState(
-      curChunk: Long, curDate: String,
-      sumPv: BigDecimal, sumV: BigDecimal,
-      rowsBefore: Long, inChunk: Long,
-      lastTsUs: Long, lastCidx: Long,
-      anchors: List[TwsAnchor], fired: List[String])
-
-  private def emptyState = TwsVwapState(Long.MinValue, "",
-    BigDecimal(0), BigDecimal(0), 0L, 0L, 0L, 0L, Nil, Nil)
+  import StreamingAnchoredVwap.{NoChunk, VwapState, VwapStep, emptyState}
 
   val outputSchema = StreamingAnchoredVwap.outputSchema
 
-  private def usTs(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  private def flushRows(sym: String, st: TwsVwapState, timeframe: String): List[Row] =
-    st.anchors.reverse.map { a =>
-      val tailPv = (st.sumPv - a.prePv).bigDecimal.setScale(2, RoundingMode.HALF_UP)
-      val tailV = (st.sumV - a.preV).bigDecimal.setScale(2, RoundingMode.HALF_UP)
-      val vwap: java.lang.Double =
-        if (tailV.signum > 0) tailPv.doubleValue() / tailV.doubleValue() else null
-      Row(sym, timeframe, a.anchorType, usTs(a.tsUs),
-        a.cidx, a.price, usTs(st.lastTsUs), st.lastCidx, vwap)
-    }
-
-  final class AnchorProcessor(inSchema: org.apache.spark.sql.types.StructType,
-                              timeframe: String, chunkWidthUs: Long,
-                              bufferSize: Int, chunkOriginUs: Long,
-                              triggers: Seq[(String, Int, Int)])
+  final class AnchorProcessor(step: VwapStep)
     extends StatefulProcessor[String, Row, Row] {
 
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[TwsVwapState] = _
+    @transient private var state: org.apache.spark.sql.streaming.ValueState[VwapState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      implicit val enc: Encoder[TwsVwapState] = Encoders.product[TwsVwapState]
-      state = getHandle.getValueState[TwsVwapState]("vwap", enc, TTLConfig.NONE)
+      implicit val enc: Encoder[VwapState] = Encoders.product[VwapState]
+      state = getHandle.getValueState[VwapState]("vwap", enc, TTLConfig.NONE)
     }
-
-    private def chunkEndMs(chunk: Long): Long =
-      (chunkOriginUs + (chunk + 1) * chunkWidthUs) / 1000L
 
     override def handleInputRows(sym: String, rows: Iterator[Row],
                                  timerValues: TimerValues): Iterator[Row] = {
-      val iTs = inSchema.fieldIndex("timestamp")
-      val iC = inSchema.fieldIndex("close")
-      val iV = inSchema.fieldIndex("volume")
-      var st = if (state.exists()) state.get() else emptyState
-      val out = List.newBuilder[Row]
-
-      rows.toArray.sortBy(_.getTimestamp(iTs).getTime).foreach { r =>
-        val ts = r.getTimestamp(iTs)
-        val tsUs = Math.multiplyExact(ts.getTime, 1000L) + (ts.getNanos / 1000L) % 1000L
-        val chunk = Math.floorDiv(tsUs - chunkOriginUs, chunkWidthUs)
-
-        if (st.curChunk != Long.MinValue && chunk > st.curChunk) {
-          out ++= flushRows(sym, st, timeframe)
-          getHandle.deleteTimer(chunkEndMs(st.curChunk))
-          st = st.copy(rowsBefore = st.rowsBefore + st.inChunk, inChunk = 0L,
-            sumPv = BigDecimal(0), sumV = BigDecimal(0), anchors = Nil)
-        }
-        if (chunk != st.curChunk) getHandle.registerTimer(chunkEndMs(chunk))
-        st = st.copy(curChunk = chunk)
-
-        val local = Instant.ofEpochMilli(ts.getTime).atZone(NY)
-        val date = local.toLocalDate.toString
-        if (date != st.curDate) {
-          // day-change reset: an earlier day's anchors never reach the
-          // chunk's last row (batch: ld = last_date)
-          st = st.copy(anchors = Nil,
-            fired = st.fired.filter(_.endsWith("@" + date)), curDate = date)
-        }
-
-        val cidx = st.inChunk + math.min(st.rowsBefore, bufferSize.toLong)
-        val close = r.getDouble(iC)
-        triggers.foreach { case (name, h, m) =>
-          val key = name + "@" + date
-          if (local.getHour == h && local.getMinute == m && !st.fired.contains(key)) {
-            st = st.copy(fired = key :: st.fired,
-              anchors = TwsAnchor(name, tsUs, cidx, close, st.sumPv, st.sumV) :: st.anchors)
-          }
-        }
-        val pD = BigDecimal(JBigDecimal.valueOf(close).setScale(2, RoundingMode.HALF_UP))
-        val vD = BigDecimal(JBigDecimal.valueOf(r.getDouble(iV)).setScale(4, RoundingMode.HALF_UP))
-        st = st.copy(sumPv = st.sumPv + pD * vD, sumV = st.sumV + vD,
-          lastTsUs = tsUs, lastCidx = cidx, inChunk = st.inChunk + 1L)
-      }
+      val st0 = if (state.exists()) state.get() else emptyState
+      val (st, out) = step.fold(sym, st0, rows, (from, to) => {
+        // a rollover already flushed `from`; its timer would find nothing
+        if (from != NoChunk && to > from) getHandle.deleteTimer(step.chunkEndMs(from))
+        getHandle.registerTimer(step.chunkEndMs(to))
+      })
       state.update(st)
-      out.result().iterator
+      out.iterator
     }
 
     override def handleExpiredTimer(sym: String, timerValues: TimerValues,
@@ -144,10 +70,10 @@ object StreamingAnchoredVwapTws {
       // only the CURRENT chunk's boundary flushes; a stale timer from a
       // chunk the arrival path already rolled past finds a guard mismatch
       // (and that flush already happened)
-      if (st.curChunk != Long.MinValue &&
-          expiredTimerInfo.getExpiryTimeInMs() == chunkEndMs(st.curChunk) &&
+      if (st.curChunk != NoChunk &&
+          expiredTimerInfo.getExpiryTimeInMs() == step.chunkEndMs(st.curChunk) &&
           st.anchors.nonEmpty) {
-        val rows = flushRows(sym, st, timeframe)
+        val rows = step.flush(sym, st)
         state.update(st.copy(anchors = Nil))
         rows.iterator
       } else Iterator.empty
@@ -163,14 +89,13 @@ object StreamingAnchoredVwapTws {
                          bufferSize: Int = 10000,
                          chunkOriginUs: Long = 0L,
                          triggers: Seq[(String, Int, Int)] = AnchorSnapshots.Triggers): DataFrame = {
-    val inSchema = candles.schema
-    val iSym = inSchema.fieldIndex("symbol")
+    val iSym = candles.schema.fieldIndex("symbol")
     implicit val rowEnc: Encoder[Row] = Encoders.row(outputSchema)
     candles
       .groupByKey((r: Row) => r.getString(iSym))(Encoders.STRING)
       .transformWithState(
-        new AnchorProcessor(inSchema, timeframe, AnchorSnapshots.chunkUs(chunkDays),
-          bufferSize, chunkOriginUs, triggers),
+        new AnchorProcessor(new VwapStep(candles.schema, timeframe, chunkDays,
+          bufferSize, chunkOriginUs, triggers)),
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -93,14 +93,11 @@ object StreamingSinks {
             case None => batch
           }).cache()
           merged.count() // pin BEFORE the overwrite truncates the source partitions
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try merged.write.mode(SaveMode.Overwrite)
+          // the write option outranks the session conf, so the batch never
+          // changes a setting the session's other queries read mid-write
+          merged.write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partitionCol).parquet(path)
-          finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
           merged.unpersist()
         }
         ()

@@ -6,7 +6,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.functions.{Hash61Kernel, Sketches}
 
-/** Streaming HyperLogLog: per-group distinct-count estimation with BOUNDED
+/** Bounded-state streaming sketches, each flushed by an explicit
+  * `is_sentinel` row per group: HLL distinct counts, histogram quantiles
+  * and per-group top-k.
+  *
+  * Streaming HyperLogLog: per-group distinct-count estimation with BOUNDED
   * state — 256 register ints per group, independent of stream length or
   * cardinality. The unbounded alternative (`dropDuplicates` + count) keeps
   * every key in the state store forever; this is the sketch trade: ~2%
@@ -169,5 +173,43 @@ object StreamingSketch {
             }
           }
       }.toDF("event_type", "q", "n", "rank_q", "est_q")
+  }
+
+  /** Streaming per-group top-k: the state IS the batch
+    * [[graft.operators.TopKAggregator]] buffer — every arriving row passes
+    * through the aggregator's own `reduce`, so batch ≡ stream holds by
+    * construction (one ordering implementation, two execution modes) and
+    * the emitted (event_type, rank, value, event_id) rows hash-match the
+    * batch `q14_topk_per_group`. State is ≤ k pairs per group, the
+    * streaming analog of the map-side-combine bound. Input columns:
+    * event_type, value, event_id[, is_sentinel]; a sentinel row (the same
+    * flush flag as [[hllDistinctStream]], not an in-band id value — real
+    * event_ids of any sign enter the buffer) triggers ranked emission.
+    */
+  def topKStream(events: DataFrame, k: Int): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val agg = graft.operators.TopKAggregator(k)
+    val flagged =
+      if (events.columns.contains("is_sentinel")) events
+      else events.withColumn("is_sentinel", lit(false))
+    val ds: Dataset[(String, Double, Long, Boolean)] = flagged
+      .select(col("event_type"), col("value"), col("event_id"), col("is_sentinel"))
+      .as[(String, Double, Long, Boolean)]
+    ds.groupByKey(_._1)
+      .flatMapGroupsWithState[Vector[(Double, Long)], (String, Int, Double, Long)](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (key: String, rows: Iterator[(String, Double, Long, Boolean)],
+         state: GroupState[Vector[(Double, Long)]]) =>
+          var buf = state.getOption.getOrElse(agg.zero)
+          var emit = false
+          rows.foreach { case (_, v, id, sentinel) =>
+            if (sentinel) emit = true else buf = agg.reduce(buf, (v, id))
+          }
+          state.update(buf)
+          if (!emit) Iterator.empty
+          else buf.iterator.zipWithIndex.map { case ((v, id), i) => (key, i + 1, v, id) }
+      }
+      .toDF("event_type", "rank", "value", "event_id")
   }
 }
