@@ -39,25 +39,24 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
 
+  /** The session every entry point uses. Conf overrides for an A/B run
+    * (e.g. `spark.graft.exactJaccard.broadcastMaxBytes=0` to time the
+    * prefix join's shuffled verify) go in as system properties —
+    * `JAVA_TOOL_OPTIONS=-Dspark.graft...=…` — which SparkConf loads and the
+    * session merges into its SQL conf.
+    */
   def get(): SparkSession = {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": session-conf overrides for A/B
-    // experiment runs (e.g. spark.graft.exactJaccard.broadcastMaxBytes=0 to
-    // time the prefix join's shuffled verify) without touching code.
-    // Session-level confs only — core confs are already fixed by the
-    // builder above.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      }
-    }
     spark
   }
 
-  private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft_warehouse_").toString
+  /** Per-JVM, and deleted with its contents when the JVM exits. */
+  private lazy val warehouseDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_warehouse_").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
 
   /** Default to every core on the machine; `SPARK_GRAFT_CPUS` overrides
     * for constrained runs.

@@ -105,41 +105,14 @@ object MinHash {
     * normalization (trim-spaces → lowercase → `\s+`→" ", as
     * [[TextOps.normalized]]), shingling, hashing and fold reproduce the
     * expression semantics value-for-value, so candidate pairs and survivor
-    * sets are unchanged.
+    * sets are unchanged. The input is widened first ([[graft.core.Widen]]):
+    * a one-row-group corpus would otherwise run the kernel on one thread.
     */
-  /** Widen the corpus-wide kernel input when the scan gave far fewer
-    * partitions than the data warrants. A mid-size text corpus often
-    * arrives as ONE parquet row group (row group < maxPartitionBytes ⇒ one
-    * split), which would run the signature kernel — and every downstream op
-    * until the first shuffle — on a single thread (measured: 16 s
-    * single-threaded vs ~4 s wide at 500k docs). Sizing is by plan-stats
-    * bytes (~2 MB of text per task ≈ the kernel's per-task sweet spot), so
-    * a tiny corpus is NOT repartitioned (the shuffle + 32-task overhead
-    * exceeds the kernel time below ~a few MB — measured as a 60% regression
-    * at 5k docs), and at real scale the scan already has more splits than
-    * cores and this no-ops. Only (id, text) ride the repartition.
-    */
-  private def widenToCores(in: DataFrame): DataFrame = {
-    // The scan's partition COUNT cannot be trusted as a parallelism signal:
-    // Spark byte-range-splits a parquet file into ~cores slices, but a row
-    // group belongs entirely to the slice holding its midpoint — a
-    // single-row-group file reports ~cores partitions with every one of
-    // them empty except one (measured: 15 "partitions", 1 effective, 16 s
-    // single-threaded kernel). So below a single-node-scale ceiling we
-    // unconditionally repartition by byte size — the ~1 s shuffle of tens
-    // of MB buys back a >10× kernel speedup, and tiny corpora skip it.
-    // Above the ceiling we trust the scan: cluster-scale tables are
-    // written with row groups ≤ maxPartitionBytes, where splits are
-    // genuinely parallel and a forced global reshuffle of the corpus would
-    // cost more than it could save. (Policy shared via [[graft.core.Widen]]
-    // since other per-row-heavy operators hit the same single-split trap.)
-    graft.core.Widen.toCores(in)
-  }
-
   def withSignatures(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                      numPerms: Int = 128, n: Int = 3): DataFrame = {
     val (as, bs) = coeffs(numPerms)
-    val in = widenToCores(docs.select(col(idCol).as("id"), col(textCol).cast("string").as("t")))
+    val in = graft.core.Widen.toCores(
+      docs.select(col(idCol).as("id"), col(textCol).cast("string").as("t")))
     val outSchema = StructType(Seq(
       in.schema.head, StructField("sig", ArrayType(LongType, containsNull = false))))
     in.mapPartitions { rows =>
@@ -233,7 +206,7 @@ object MinHash {
     */
   def withShingleHashSets(docs: DataFrame, textCol: String = "text",
                           idCol: String = "doc_id", n: Int = 3): DataFrame = {
-    // no widenToCores here: the verify stage's input is candidate-bound
+    // no Widen.toCores here: the verify stage's input is candidate-bound
     // (semi-joined to pair ids), so it is small by construction and a
     // forced repartition only adds a shuffle + per-task overhead
     val in = docs.select(col(idCol).as("id"), col(textCol).cast("string").as("t"))

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -31,15 +32,56 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine from a pair dot and two PRE-COMPUTED norms — same double ops in
-    * the same order as [[cosine]] (dot / (na · nb)), so the rounded scores
-    * are bit-identical; computing each vector's norm once upstream instead
-    * of once per pair turns 3 array reductions per pair into 1. At 100 TB
-    * the per-pair savings dominate: a top-k over Q queries re-derived every
-    * corpus norm Q times.
+  /** The (vec_id, embedding, nrm) frame every exact scorer reads — each
+    * vector's norm computed once here, not once per pair — plus any
+    * `extra` columns the caller carries through.
     */
-  private def cosineFromNorms(dotAB: Column, na: Column, nb: Column): Column =
-    dotAB / (na * nb)
+  private def normed(vectors: DataFrame, extra: Column*): DataFrame =
+    vectors.select(Seq(col("vec_id"), col("embedding"),
+      norm(col("embedding")).as("nrm")) ++ extra: _*)
+
+  /** One side of a scored pair: a [[normed]] frame keyed as `id`, its
+    * vector and norm under names derived from `id`. Selecting both sides
+    * from one (possibly broadcast-hinted) frame keeps them canonically
+    * identical, so ReuseExchange builds a broadcast once.
+    */
+  private def side(emb: DataFrame, id: String, extra: Column*): DataFrame =
+    emb.select(Seq(col("vec_id").as(id), col("embedding").as(s"${id}__e"),
+      col("nrm").as(s"${id}__n")) ++ extra: _*)
+
+  /** The rounded exact cosine between the vectors of sides `a` and `b`,
+    * from their PRE-COMPUTED norms — the same double ops in the same order
+    * as [[cosine]] (dot / (na · nb)), so the rounded scores are
+    * bit-identical, with 1 array reduction per pair instead of 3. At
+    * 100 TB the per-pair savings dominate: a top-k over Q queries would
+    * re-derive every corpus norm Q times.
+    */
+  private def pairCosine(a: String, b: String, roundTo: Int = 6): Column =
+    round(dot(col(s"${a}__e"), col(s"${b}__e")) / (col(s"${a}__n") * col(s"${b}__n")),
+      roundTo).as("cos")
+
+  /** Candidate id pairs (columns `a`, `b`) scored exactly: both ids'
+    * vectors re-attach from `emb` (a [[normed]] frame, broadcast-hinted
+    * when the caller's gate says it fits) by two joins. Output: a, b, cos.
+    */
+  private def scorePairs(pairs: DataFrame, emb: DataFrame, a: String, b: String): DataFrame =
+    pairs.join(side(emb, a), a).join(side(emb, b), b)
+      .select(col(a), col(b), pairCosine(a, b))
+
+  /** Each query's `k` best rows by `score` (a sort order: cosine
+    * descending, PQ distance ascending), ties broken on the lower
+    * neighbor_id, numbered 1..k as `rank`.
+    */
+  private def topK(scored: DataFrame, score: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(score, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** Keep the lower id of every near-dup pair: drop each pair's `id_b`. */
+  private def dropHigherIds(vectors: DataFrame, pairs: DataFrame): DataFrame = {
+    val dups = pairs.select(col("id_b").as("__dup")).distinct()
+    vectors.join(dups, vectors("vec_id") === dups("__dup"), "left_anti")
+  }
 
   /** Exact top-k neighbors for each query vector. Output: query_id,
     * neighbor_id, cosine rounded to `roundTo` decimals (rounding pins the
@@ -47,16 +89,10 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int = 5,
                      roundTo: Int = 6): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      norm(col("embedding")).as("qn"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-      norm(col("embedding")).as("cn"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineFromNorms(dot(col("qe"), col("ce")), col("qn"), col("cn")), roundTo).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val scored = side(normed(corpus), "neighbor_id")
+      .join(broadcast(side(normed(queries), "query_id")), col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), pairCosine("query_id", "neighbor_id", roundTo))
+    topK(scored, col("cos").desc, k)
   }
 
   /** Contrastive hard-negative mining: for each query vector, the top-k
@@ -81,18 +117,15 @@ object Similarity {
     */
   def hardNegativeTopK(queries: DataFrame, corpus: DataFrame, k: Int = 5,
                        roundTo: Int = 6): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      norm(col("embedding")).as("qn"), col("label").as("query_label"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-      norm(col("embedding")).as("cn"), col("label").as("neighbor_label"))
+    val label = col("label")
+    val q = side(normed(queries, label), "query_id", label.as("query_label"))
+    val c = side(normed(corpus, label), "neighbor_id", label.as("neighbor_label"))
     val scored = c.join(broadcast(q),
         col("query_id") =!= col("neighbor_id") &&
           col("neighbor_label") =!= col("query_label"))
       .select(col("query_id"), col("query_label"), col("neighbor_id"), col("neighbor_label"),
-        round(cosineFromNorms(dot(col("qe"), col("ce")), col("qn"), col("cn")), roundTo).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        pairCosine("query_id", "neighbor_id", roundTo))
+    topK(scored, col("cos").desc, k)
   }
 
   /** Exact cosine near-duplicate pairs: id_a < id_b with rounded cosine ≥
@@ -101,20 +134,15 @@ object Similarity {
     * sign-random-projection tables first and verifies only within buckets.
     */
   def nearDupPairs(vectors: DataFrame, threshold: Double, roundTo: Int = 6): DataFrame = {
-    val withN = vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val a = withN.select(col("vec_id").as("id_a"), col("embedding").as("ea"), col("nrm").as("na"))
-    val b = withN.select(col("vec_id").as("id_b"), col("embedding").as("eb"), col("nrm").as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosineFromNorms(dot(col("ea"), col("eb")), col("na"), col("nb")), roundTo).as("cos"))
+    val emb = normed(vectors)
+    side(emb, "id_a").join(side(emb, "id_b"), col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), pairCosine("id_a", "id_b", roundTo))
       .filter(col("cos") >= threshold)
   }
 
   /** Embedding near-dup dedup: drop the larger id of every near-dup pair. */
-  def dedupByCosine(vectors: DataFrame, threshold: Double): DataFrame = {
-    val dups = nearDupPairs(vectors, threshold).select(col("id_b").as("__dup")).distinct()
-    vectors.join(dups, vectors("vec_id") === dups("__dup"), "left_anti")
-  }
+  def dedupByCosine(vectors: DataFrame, threshold: Double): DataFrame =
+    dropHigherIds(vectors, nearDupPairs(vectors, threshold))
 
   /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
     * a value in [-1, 1) derived from xxhash64 — reproducible everywhere,
@@ -154,22 +182,27 @@ object Similarity {
     * only where exact scoring needs them. The boundary is an eager
     * localCheckpoint: see [[MinHash.candidatePairs]] for the contract.
     */
-  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int): DataFrame = {
-    // one native pass computes every table's bucket (posexplode position =
-    // table index, matching the former lit(t) struct layout exactly). A
-    // NULL embedding gets bucket 0 in every table — the expression-spec
-    // semantics (null proj -> no sign bits) — because posexplode of the
-    // native NULL result would silently drop the id from every bucket
-    // table. Materialized EAGERLY: the frame feeds both sides of a
-    // self-join in ONE downstream action, and a lazy cache let the two
-    // sides race to compute it concurrently (observed as "Block already
-    // exists" recompute warnings and ~2× the bucketing cost at bench scale)
+  private[graft] def bucketedFrame(vectors: DataFrame, bits: Int, tables: Int): DataFrame =
+    // Materialized EAGERLY: the frame feeds both sides of a self-join in
+    // ONE downstream action, and a lazy cache let the two sides race to
+    // compute it concurrently (observed as "Block already exists" recompute
+    // warnings and ~2× the bucketing cost at bench scale)
+    explodeBuckets(bucketVectors(vectors, bits, tables)).localCheckpoint(true)
+
+  /** (vec_id, bks): every table's bucket of each vector, from one native
+    * pass. A NULL embedding gets bucket 0 in every table — the
+    * expression-spec semantics (null proj -> no sign bits) — because
+    * posexplode of the native NULL result would silently drop the id from
+    * every bucket table.
+    */
+  private def bucketVectors(vectors: DataFrame, bits: Int, tables: Int): DataFrame =
     vectors.select(col("vec_id"),
-        coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
-          array_repeat(lit(0L), tables)).as("bks"))
-      .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
-      .localCheckpoint(true)
-  }
+      coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
+        array_repeat(lit(0L), tables)).as("bks"))
+
+  /** (vec_id, table, bucket): posexplode position = table index. */
+  private def explodeBuckets(perId: DataFrame): DataFrame =
+    perId.select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
 
   /** Approximate top-k: candidate id pairs share an LSH bucket (scalar
     * join, deduped across tables on two ids); exact cosine re-ranks the
@@ -187,17 +220,7 @@ object Similarity {
     val cand = a.join(b, Seq("table", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
-    val emb = vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val scored = cand
-      .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn")), "query_id")
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("nrm").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineFromNorms(dot(col("qe"), col("ce")), col("qn"), col("cn")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scorePairs(cand, normed(vectors), "query_id", "neighbor_id"), col("cos").desc, k)
   }
 
   /** Embedding near-dup dedup through LSH buckets — the 100 TB path for
@@ -223,18 +246,20 @@ object Similarity {
     // indifferent to emission multiplicity, so output is unchanged
     val candidates = lshCandidatePairsDeduped(vectors, bits, tables)
     // re-attach embeddings from the INPUT frame (one row per id) — a
-    // distinct over the bucketed frame would shuffle the arrays ×tables —
-    // with each vector's norm computed ONCE here, not per candidate pair
-    val emb = vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val dups = candidates
-      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
-        col("nrm").as("na")), "id_a")
-      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
-        col("nrm").as("nb")), "id_b")
-      .filter(round(cosineFromNorms(dot(col("ea"), col("eb")), col("na"), col("nb")), 6) >= threshold)
-      .select(col("id_b").as("__dup")).distinct()
-    vectors.join(dups, vectors("vec_id") === dups("__dup"), "left_anti")
+    // distinct over the bucketed frame would shuffle the arrays ×tables
+    dropHigherIds(vectors,
+      scorePairs(candidates, normed(vectors), "id_a", "id_b").filter(col("cos") >= threshold))
   }
+
+  /** Byte budget for broadcasting the (vec_id, embedding, nrm) frame in
+    * [[nearDupPairsLsh]]'s verify stage — estimate `rows × (dims·8 B + 64)`;
+    * past it the attach falls back to a shuffled join instead of failing at
+    * Spark's 8 GB broadcast ceiling. Session config, not a constant (the
+    * [[graft.functions.PrefixJoin.BroadcastBytesKey]] convention): a real
+    * cluster sizes it to executor memory.
+    */
+  val NearDupBroadcastBytesKey = "spark.graft.nearDupPairs.broadcastMaxBytes"
+  private val NearDupBroadcastBytesDefault = 1600000000L
 
   /** Candidate-verified near-dup PAIRS through LSH buckets — the pair-list
     * form of [[dedupByCosineLsh]] for consumers that need the ε-graph
@@ -247,16 +272,6 @@ object Similarity {
     * misses a grazing edge with p ≈ 3e-6 while verifying only ~bucket-local
     * candidates instead of all pairs.
     */
-  /** Byte budget for broadcasting the (vec_id, embedding, nrm) frame in
-    * [[nearDupPairsLsh]]'s verify stage — estimate `rows × (dims·8 B + 64)`;
-    * past it the attach falls back to a shuffled join instead of failing at
-    * Spark's 8 GB broadcast ceiling. Session config, not a constant (the
-    * [[graft.functions.PrefixJoin.BroadcastBytesKey]] convention): a real
-    * cluster sizes it to executor memory.
-    */
-  val NearDupBroadcastBytesKey = "spark.graft.nearDupPairs.broadcastMaxBytes"
-  private val NearDupBroadcastBytesDefault = 1600000000L
-
   def nearDupPairsLsh(vectors: DataFrame, threshold: Double, bits: Int = 12,
                       tables: Int = 64): DataFrame =
     verifyCandidatePairs(vectors, lshCandidatePairsDeduped(vectors, bits, tables), threshold)
@@ -267,10 +282,16 @@ object Similarity {
     * budget (see [[lshCandidatePairsDeduped]]) and as DbscanSpec's
     * reference candidate set.
     */
-  private[graft] def lshCandidatePairs(bucketed: DataFrame): DataFrame = {
-    val a = bucketed.select(col("table"), col("bucket"), col("vec_id").as("id_a"))
-    val b = bucketed.select(col("table"), col("bucket"), col("vec_id").as("id_b"))
-    a.join(b, Seq("table", "bucket"))
+  private[graft] def lshCandidatePairs(bucketed: DataFrame): DataFrame =
+    pairsSharing(bucketed, Seq("table", "bucket"))
+
+  /** Distinct id pairs id_a < id_b of a (keys…, vec_id) frame whose rows
+    * share every key — one shuffle on the scalar keys, arrays never ride.
+    */
+  private def pairsSharing(keyed: DataFrame, keys: Seq[String]): DataFrame = {
+    val a = keyed.select(keys.map(col) :+ col("vec_id").as("id_a"): _*)
+    val b = keyed.select(keys.map(col) :+ col("vec_id").as("id_b"): _*)
+    a.join(b, keys)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
   }
@@ -306,17 +327,12 @@ object Similarity {
     */
   private[graft] def lshCandidatePairsDeduped(vectors: DataFrame, bits: Int,
                                               tables: Int): DataFrame = {
-    // one native pass computes every table's bucket; NULL embedding →
-    // bucket 0 in every table (the bucketedFrame convention, see its note).
-    // Eager for the same reason as bucketedFrame: both self-join sides (and
+    // eager for the same reason as bucketedFrame: both self-join sides (and
     // the broadcast build) consume it in one downstream action; the row
-    // count then reads the checkpoint's local blocks, not the input.
-    val perId = vectors.select(col("vec_id"),
-      coalesce(VectorExprs.signBuckets(col("embedding"), bits, tables),
-        array_repeat(lit(0L), tables)).as("bks")).localCheckpoint(true)
+    // count then reads the checkpoint's local blocks, not the input
+    val perId = bucketVectors(vectors, bits, tables).localCheckpoint(true)
     val n = perId.count()
-    val exploded = perId
-      .select(col("vec_id"), posexplode(col("bks")).as(Seq("table", "bucket")))
+    val exploded = explodeBuckets(perId)
     val budget = vectors.sparkSession.conf
       .getOption(BucketVectorBroadcastBytesKey).map(_.toLong)
       .getOrElse(BucketVectorBroadcastBytesDefault)
@@ -336,6 +352,15 @@ object Similarity {
           col("__ka.__kbks"), col("__kb.__kbks")) === col("table"))
         .select(col("id_a"), col("id_b"))
     }
+  }
+
+  /** The (vec_id, embedding, nrm) frame's bytes as `rows × (dims·8 B + 64)`
+    * from one bounded probe; -1 for an empty frame.
+    */
+  private def probedVectorBytes(vectors: DataFrame): Long = {
+    val firstDims = vectors.select(size(col("embedding"))).take(1)
+    if (firstDims.isEmpty) -1L
+    else vectors.count() * (firstDims(0).getInt(0).toLong * 8L + 64L)
   }
 
   /** Exact rounded-cosine verification of candidate id pairs — the verify
@@ -368,16 +393,9 @@ object Similarity {
     * + `count()` for rows — run once per call: the figure only picks the
     * join strategy, so no statistic outlives the call.
     */
-  private def probedVectorBytes(vectors: DataFrame): Long = {
-    val firstDims = vectors.select(size(col("embedding"))).take(1)
-    if (firstDims.isEmpty) -1L
-    else vectors.count() * (firstDims(0).getInt(0).toLong * 8L + 64L)
-  }
-
   private[graft] def verifyCandidatePairs(vectors: DataFrame, candidates: DataFrame,
                                           threshold: Double): DataFrame = {
-    val embPlain =
-      vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
+    val embPlain = normed(vectors)
     val maxBytes = vectors.sparkSession.conf
       .getOption(NearDupBroadcastBytesKey).map(_.toLong)
       .getOrElse(NearDupBroadcastBytesDefault)
@@ -388,13 +406,8 @@ object Similarity {
         val bytes = probedVectorBytes(vectors)
         bytes >= 0L && bytes <= maxBytes
       }
-    val emb = if (fits) broadcast(embPlain) else embPlain
-    candidates
-      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
-        col("nrm").as("na")), "id_a")
-      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
-        col("nrm").as("nb")), "id_b")
-      .filter(round(cosineFromNorms(dot(col("ea"), col("eb")), col("na"), col("nb")), 6) >= threshold)
+    scorePairs(candidates, if (fits) broadcast(embPlain) else embPlain, "id_a", "id_b")
+      .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"))
   }
 
@@ -436,32 +449,11 @@ object Similarity {
     */
   def semanticDedup(vectors: DataFrame, threshold: Double, nlist: Int = 16,
                     nprobe: Int = 2, iters: Int = 5): DataFrame = {
-    val cents = kmeansCentroids(vectors, nlist, iters)
-    val centDf = centroidTable(vectors.sparkSession, cents)
-    val probes = vectors
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(centDf))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(
-        VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
-        col("__list_id").as("i")))), 1, nprobe).as("__near"))
-      .select(col("vec_id"), explode(expr("transform(__near, s -> s.i)")).as("list"))
+    val probes = probeLists(vectors, kmeansCentroids(vectors, nlist, iters), nprobe, "vec_id")
       .localCheckpoint(true)
-    val a = probes.select(col("list"), col("vec_id").as("id_a"))
-    val b = probes.select(col("list"), col("vec_id").as("id_b"))
-    val candidates = a.join(b, Seq("list"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val emb = vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val dups = candidates
-      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
-        col("nrm").as("na")), "id_a")
-      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
-        col("nrm").as("nb")), "id_b")
-      .filter(round(cosineFromNorms(dot(col("ea"), col("eb")), col("na"), col("nb")), 6) >= threshold)
-      .select(col("id_b").as("__dup")).distinct()
-    vectors.join(dups, vectors("vec_id") === dups("__dup"), "left_anti")
+    val candidates = pairsSharing(probes, Seq("list"))
+    dropHigherIds(vectors,
+      scorePairs(candidates, normed(vectors), "id_a", "id_b").filter(col("cos") >= threshold))
   }
 
   // ------------------------------------------------------------------ IVF
@@ -502,11 +494,44 @@ object Similarity {
       .select(col("vec_id"), col("m.i").as("list"), col("m.e").as("embedding"))
   }
 
+  /** Each vector's `nprobe` nearest lists, one (`id`, list) row per probe:
+    * broadcast-cross the centroid table, collect_list + array_sort of
+    * (distance, index) structs — partial aggregation folds the nlist
+    * expansion map-side; ties break on the lower index, deterministically,
+    * like [[assignLists]]. Null embeddings route nowhere.
+    */
+  private def probeLists(vectors: DataFrame, cents: Array[Array[Double]], nprobe: Int,
+                         id: String): DataFrame =
+    vectors
+      .filter(col("embedding").isNotNull)
+      .select(col("vec_id").as(id), col("embedding"))
+      .join(broadcast(centroidTable(vectors.sparkSession, cents)))
+      .groupBy(col(id))
+      .agg(slice(array_sort(collect_list(struct(
+        VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
+        col("__list_id").as("i")))), 1, nprobe).as("__near"))
+      .select(col(id), explode(expr("transform(__near, s -> s.i)")).as("list"))
+
+  /** IVF candidate pairs: each query probes its `nprobe` nearest of
+    * `nlist` k-means lists over `vectors` and meets every corpus vector
+    * assigned there (scalars only — (id, list) on both sides), self-matches
+    * excluded. Output: query_id, neighbor_id, not deduplicated.
+    */
+  private def ivfCandidates(vectors: DataFrame, queries: DataFrame, nlist: Int, nprobe: Int,
+                            iters: Int): DataFrame = {
+    val cents = kmeansCentroids(vectors, nlist, iters)
+    val corpus = assignLists(vectors, cents)
+      .select(col("vec_id").as("neighbor_id"), col("list"))
+    probeLists(queries, cents, nprobe, "query_id").join(corpus, "list")
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"))
+  }
+
   /** Lloyd's k-means over the embedding column, pure DataFrame ops: assign
-    * by nearest-centroid expression (centroids inlined as literals), new
-    * centroids from per-dimension sums, k×dims doubles collected per
-    * iteration (the classic driver-side k-means loop — the collected state
-    * is the MODEL, not data). Init is deterministic farthest-point
+    * by nearest centroid ([[assignLists]]), new centroids from
+    * per-dimension sums, k×dims doubles collected per iteration (the
+    * classic driver-side k-means loop — the collected state is the MODEL,
+    * not data). Init is deterministic farthest-point
     * (maxmin) over a deterministic SAMPLE: the `initSample` lowest
     * xxhash64(vec_id) rows — ONE TakeOrdered pass over the corpus,
     * O(initSample) driver memory — then driver-side maxmin within the
@@ -587,6 +612,12 @@ object Similarity {
     * and embeddings re-attach by id for scoring, same discipline as the
     * LSH paths.
     */
+  def ivfTopK(vectors: DataFrame, k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
+              iters: Int = 5): DataFrame = {
+    val cand = ivfCandidates(vectors, vectors, nlist, nprobe, iters).distinct()
+    topK(scorePairs(cand, normed(vectors), "query_id", "neighbor_id"), col("cos").desc, k)
+  }
+
   // ------------------------------------------------------------------ PQ
 
   /** Product-quantization codebooks: the embedding splits into `m`
@@ -622,6 +653,16 @@ object Similarity {
     } yield (s, c, cent.toSeq)).toSeq.toDF("__sub", "__code", "__cent")
   }
 
+  /** Each non-null embedding's `m` contiguous `sub`-dim slices, one
+    * (`id`, __sub, __sv) row per slice.
+    */
+  private def subVectors(vectors: DataFrame, id: String, m: Int, sub: Int): DataFrame =
+    vectors
+      .filter(col("embedding").isNotNull)
+      .select(col("vec_id").as(id), posexplode(expr(
+        s"transform(sequence(0, ${m - 1}), s -> slice(embedding, s * $sub + 1, $sub))")))
+      .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__sv")
+
   /** PQ-encode: each vector becomes m small codes. One explode to
     * subvectors, one broadcast join against the codebook table, one
     * min-struct aggregation per (vec_id, sub), one collect per vec_id —
@@ -633,11 +674,7 @@ object Similarity {
     val m = books.length
     val sub = books(0)(0).length
     val bt = bookTable(vectors.sparkSession, books)
-    vectors
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> slice(embedding, s * $sub + 1, $sub))")))
-      .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__sv")
+    subVectors(vectors, "vec_id", m, sub)
       .join(broadcast(bt), "__sub")
       .groupBy(col("vec_id"), col("__sub"))
       .agg(min(struct(
@@ -666,33 +703,41 @@ object Similarity {
     */
   def pqTopK(vectors: DataFrame, queries: DataFrame, k: Int = 5,
              m: Int = 8, ksub: Int = 16, iters: Int = 5): DataFrame = {
+    val (codes, lut) = adcInputs(vectors, queries, m, ksub, iters)
+    adcRank(codes
+      .join(broadcast(lut), Seq("__sub", "__code"))
+      .filter(col("query_id") =!= col("neighbor_id")), m, k)
+  }
+
+  /** What [[pqTopK]] and [[ivfPqTopK]] score with: the corpus codes
+    * exploded to (neighbor_id, __sub, __code), and the per-query LUT
+    * (query_id, __sub, __code, __d) holding the exact squared L2 from each
+    * query subvector to every codebook centroid.
+    */
+  private def adcInputs(vectors: DataFrame, queries: DataFrame, m: Int, ksub: Int,
+                        iters: Int): (DataFrame, DataFrame) = {
     val books = pqCodebooks(vectors, m, ksub, iters)
-    val sub = books(0)(0).length
     val codes = pqEncode(vectors, books)
       .select(col("vec_id").as("neighbor_id"), posexplode(col("codes")))
       .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__code")
-    val bt = bookTable(vectors.sparkSession, books)
-    val lut = queries
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> slice(embedding, s * $sub + 1, $sub))")))
-      .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__sv")
-      .join(broadcast(bt), "__sub")
+    val lut = subVectors(queries, "query_id", m, books(0)(0).length)
+      .join(broadcast(bookTable(vectors.sparkSession, books)), "__sub")
       .select(col("query_id"), col("__sub"), col("__code"),
         VectorExprs.l2Sq(col("__sv"), col("__cent")).as("__d"))
-    val scored = codes
-      .join(broadcast(lut), Seq("__sub", "__code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    (codes, lut)
+  }
+
+  /** The ADC tail: each (query, neighbor)'s m LUT distances summed to
+    * est_dist, ranked ascending. A pair missing a sub never happens —
+    * codes are total — but the `__n === m` guard keeps the invariant so a
+    * broken encode fails loudly.
+    */
+  private def adcRank(scored: DataFrame, m: Int, k: Int): DataFrame =
+    topK(scored
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("__d")).as("est_dist"), count(lit(1)).as("__n"))
-      // a (query, neighbor) pair missing a sub never happens — codes are
-      // total — but guard the invariant so a broken encode fails loudly
-      .filter(col("__n") === m)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("est_dist").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .filter(col("__n") === m), col("est_dist").asc, k)
       .drop("__n")
-  }
 
   /** IVF-PQ: coarse-quantizer routing (nprobe of nlist lists per query,
     * exactly [[ivfTopK]]'s probe machinery) composed with PQ ADC scoring
@@ -706,79 +751,9 @@ object Similarity {
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, k: Int = 5,
                 nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
                 iters: Int = 5): DataFrame = {
-    val cents = kmeansCentroids(vectors, nlist, iters)
-    val books = pqCodebooks(vectors, m, ksub, iters)
-    val sub = books(0)(0).length
-    val corpus = assignLists(vectors, cents)
-      .select(col("vec_id").as("neighbor_id"), col("list"))
-    val centDf = centroidTable(vectors.sparkSession, cents)
-    val q = queries.filter(col("embedding").isNotNull)
-    val probes = q
-      .select(col("vec_id").as("query_id"), col("embedding"))
-      .join(broadcast(centDf))
-      .groupBy(col("query_id"))
-      .agg(slice(array_sort(collect_list(struct(
-        VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
-        col("__list_id").as("i")))), 1, nprobe).as("__near"))
-      .select(col("query_id"), explode(expr("transform(__near, s -> s.i)")).as("list"))
-    val cand = probes.join(corpus, "list")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-    val codes = pqEncode(vectors, books)
-      .select(col("vec_id").as("neighbor_id"), posexplode(col("codes")))
-      .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__code")
-    val bt = bookTable(vectors.sparkSession, books)
-    val lut = q
-      .select(col("vec_id").as("query_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> slice(embedding, s * $sub + 1, $sub))")))
-      .withColumnRenamed("pos", "__sub").withColumnRenamed("col", "__sv")
-      .join(broadcast(bt), "__sub")
-      .select(col("query_id"), col("__sub"), col("__code"),
-        VectorExprs.l2Sq(col("__sv"), col("__cent")).as("__d"))
-    val scored = cand.join(codes, "neighbor_id")
-      .join(broadcast(lut), Seq("query_id", "__sub", "__code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("__d")).as("est_dist"), count(lit(1)).as("__n"))
-      .filter(col("__n") === m)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("est_dist").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .drop("__n")
-  }
-
-  def ivfTopK(vectors: DataFrame, k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
-              iters: Int = 5): DataFrame = {
-    val cents = kmeansCentroids(vectors, nlist, iters)
-    val corpus = assignLists(vectors, cents)
-      .select(col("vec_id").as("neighbor_id"), col("list"))
-    // nprobe nearest lists per query, via the same broadcast centroid
-    // table: collect_list + array_sort of (distance, index) structs —
-    // partial aggregation folds the nlist expansion map-side; ties break
-    // on the lower index, deterministically, like the assignment
-    val centDf = centroidTable(vectors.sparkSession, cents)
-    val probes = vectors
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-      .join(broadcast(centDf))
-      .groupBy(col("query_id"))
-      .agg(slice(array_sort(collect_list(struct(
-        VectorExprs.l2Sq(col("embedding"), col("__cent")).as("d"),
-        col("__list_id").as("i")))), 1, nprobe).as("__near"))
-      .select(col("query_id"),
-        explode(expr("transform(__near, s -> s.i)")).as("list"))
-    val cand = probes.join(corpus, "list")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id")).distinct()
-    val emb = vectors.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
-    val scored = cand
-      .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn")), "query_id")
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("nrm").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineFromNorms(dot(col("qe"), col("ce")), col("qn"), col("cn")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val cand = ivfCandidates(vectors, queries, nlist, nprobe, iters)
+    val (codes, lut) = adcInputs(vectors, queries, m, ksub, iters)
+    adcRank(cand.join(codes, "neighbor_id")
+      .join(broadcast(lut), Seq("query_id", "__sub", "__code")), m, k)
   }
 }

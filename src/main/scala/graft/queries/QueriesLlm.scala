@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.core.Tables
 import graft.functions.{MinHash, SimHash, Similarity, TextOps}
@@ -319,20 +320,11 @@ object QueriesLlm {
     * composed floor as robust as each component's own row.
     */
   private def ivfPqNear(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001f) + lit(0.01f)).as("embedding"))
-    val base = e.select(col("vec_id"), col("embedding")).unionByName(injected)
+    val (injected, base) = injectNearCopies(Tables.embeddings(s, dir))
     val hits = Similarity.ivfPqTopK(base, base.filter(col("vec_id") >= 100000),
         k = 1, nprobe = 8)
       .filter(col("neighbor_id") === col("query_id") - 100000)
-    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
-        hits.agg(count(lit(1)).as("n_near_hits")))
-      .select(col("n_near_queries"),
-        (col("n_near_hits").cast("double") / col("n_near_queries") >= 0.9)
-          .as("passes_floor"))
+    nearFloor(injected, hits)
   }
 
   /** SimHash near-dup pairs by Hamming distance. maxDist = 7 rides the
@@ -423,17 +415,6 @@ object QueriesLlm {
       |SELECT qid AS query_id, nid AS neighbor_id, nl AS neighbor_label, cos, rank
       |FROM r WHERE rank <= 5""".stripMargin
 
-  /** LSH-bucketed approximate top-k (the 100 TB path), self-checking: recall
-    * is measured on the retrieval task ANN exists for — queries with a
-    * GENUINELY near neighbor (injected perturbed copies, cosine ≈ 0.9999;
-    * same scheme as llm_embed_neardup) must get their true nearest neighbor
-    * back at rank 1. Per 8-bit table that collision fires with p ≈ 0.98, so
-    * 4 tables pin recall ≈ 1. The raw "recall the brute-force top-5 of
-    * near-orthogonal noise" metric is also emitted for honesty
-    * (`top5_noise_recall`) — it is structurally low (pairwise cos ≈ 0.5 →
-    * (2/3)^8 per table) and NOT what buckets are for; no floor is claimed
-    * on it. A spec pins near_recall ≥ 0.8 (LlmOpsSpec).
-    */
   /** Injected-copy id headroom guard: the fixed injection offsets must
     * clear the real id range, or copies would collide with real ids and the
     * construction-based oracles would corrupt SILENTLY (an injected-looking
@@ -447,6 +428,37 @@ object QueriesLlm {
     require(maxId < offset,
       s"$idCol max $maxId >= injection offset $offset — raise the offset")
   }
+
+  /** The injected near-copy fixture of the vector-search rows: each
+    * 50th vector copied to `vec_id + 100000` as x·1.001 + 0.01, computed in
+    * the embedding's own element type (float rows multiply by float
+    * literals, double rows by double ones). Returns (injected, the base
+    * vectors ∪ injected), both (vec_id, embedding).
+    */
+  private def injectNearCopies(e: DataFrame): (DataFrame, DataFrame) = {
+    requireIdHeadroom(e, "vec_id", 100000L)
+    val t = e.schema("embedding").dataType.asInstanceOf[ArrayType].elementType
+    val injected = e.filter(col("vec_id") % 50 === 0)
+      .select((col("vec_id") + 100000).as("vec_id"),
+        transform(col("embedding"), x => x * lit(1.001).cast(t) + lit(0.01).cast(t))
+          .as("embedding"))
+    (injected, e.select(col("vec_id"), col("embedding")).unionByName(injected))
+  }
+
+  /** How many injected copies there are, and how many `hits` retrieved
+    * their original: (n_near_queries, n_near_hits), one row.
+    */
+  private def nearCounts(injected: DataFrame, hits: DataFrame): DataFrame =
+    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
+      hits.agg(count(lit(1)).as("n_near_hits")))
+
+  /** The floor rows' verdict: at least 90% of the copies retrieved their
+    * original. Output: n_near_queries, passes_floor.
+    */
+  private def nearFloor(injected: DataFrame, hits: DataFrame): DataFrame =
+    nearCounts(injected, hits)
+      .select(col("n_near_queries"),
+        (col("n_near_hits").cast("double") / col("n_near_queries") >= 0.9).as("passes_floor"))
 
   /** Shared injected-near-neighbor construction: perturbed copies of every
     * 50th vector, and the LSH top-1 hits where the copy retrieved its
@@ -462,16 +474,23 @@ object QueriesLlm {
     * verified all-hit on every test SF.
     */
   private def injectedNearHits(e: DataFrame): (DataFrame, DataFrame) = {
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001f) + lit(0.01f)).as("embedding"))
-    val base = e.select(col("vec_id"), col("embedding")).unionByName(injected)
+    val (injected, base) = injectNearCopies(e)
     val nearHits = Similarity.lshTopK(base, k = 1, bits = 8, tables = 8)
       .filter(col("query_id") >= 100000 && col("neighbor_id") === col("query_id") - 100000)
     (injected, nearHits)
   }
 
+  /** LSH-bucketed approximate top-k (the 100 TB path), self-checking: recall
+    * is measured on the retrieval task ANN exists for — queries with a
+    * GENUINELY near neighbor (injected perturbed copies, cosine ≈ 0.9999;
+    * same scheme as llm_embed_neardup) must get their true nearest neighbor
+    * back at rank 1. Per 8-bit table that collision fires with p ≈ 0.98, so
+    * 4 tables pin recall ≈ 1. The raw "recall the brute-force top-5 of
+    * near-orthogonal noise" metric is also emitted for honesty
+    * (`top5_noise_recall`) — it is structurally low (pairwise cos ≈ 0.5 →
+    * (2/3)^8 per table) and NOT what buckets are for; no floor is claimed
+    * on it. A spec pins near_recall ≥ 0.8 (LlmOpsSpec).
+    */
   private def ann(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     // noise metric: brute-force top-5 of the first 10 raw vectors
@@ -485,8 +504,7 @@ object QueriesLlm {
       "left_semi")
     // near-neighbor metric: injected copies must retrieve their original at rank 1
     val (injected, nearHits) = injectedNearHits(e)
-    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
-        nearHits.agg(count(lit(1)).as("n_near_hits"))).crossJoin(
+    nearCounts(injected, nearHits).crossJoin(
         exact.agg(count(lit(1)).as("n_exact"))).crossJoin(
         noiseHits.agg(count(lit(1)).as("n_noise_recalled")))
       .withColumn("near_recall",
@@ -508,8 +526,7 @@ object QueriesLlm {
     */
   private def annNear(s: SparkSession, dir: String): DataFrame = {
     val (injected, nearHits) = injectedNearHits(Tables.embeddings(s, dir))
-    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
-        nearHits.agg(count(lit(1)).as("n_near_hits")))
+    nearCounts(injected, nearHits)
       .withColumn("near_recall",
         round(col("n_near_hits").cast("double") / col("n_near_queries"), 4))
   }
@@ -528,19 +545,10 @@ object QueriesLlm {
     * contracts, and the DuckDB oracle pins it as a hash-checked boolean.
     */
   private def ivfNear(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001f) + lit(0.01f)).as("embedding"))
-    val base = e.select(col("vec_id"), col("embedding")).unionByName(injected)
+    val (injected, base) = injectNearCopies(Tables.embeddings(s, dir))
     val hits = Similarity.ivfTopK(base, k = 1, nlist = 16, nprobe = 4)
       .filter(col("query_id") >= 100000 && col("neighbor_id") === col("query_id") - 100000)
-    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
-        hits.agg(count(lit(1)).as("n_near_hits")))
-      .select(col("n_near_queries"),
-        (col("n_near_hits").cast("double") / col("n_near_queries") >= 0.9)
-          .as("passes_floor"))
+    nearFloor(injected, hits)
   }
 
   private val ivfNearSql =
@@ -557,19 +565,10 @@ object QueriesLlm {
     * original on id ties.
     */
   private def pqNear(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001f) + lit(0.01f)).as("embedding"))
-    val base = e.select(col("vec_id"), col("embedding")).unionByName(injected)
+    val (injected, base) = injectNearCopies(Tables.embeddings(s, dir))
     val hits = Similarity.pqTopK(base, base.filter(col("vec_id") >= 100000), k = 1)
       .filter(col("neighbor_id") === col("query_id") - 100000)
-    injected.agg(count(lit(1)).as("n_near_queries")).crossJoin(
-        hits.agg(count(lit(1)).as("n_near_hits")))
-      .select(col("n_near_queries"),
-        (col("n_near_hits").cast("double") / col("n_near_queries") >= 0.9)
-          .as("passes_floor"))
+    nearFloor(injected, hits)
   }
 
   /** Language ID + quality-score buckets per source. Quality is per-row
@@ -655,43 +654,39 @@ object QueriesLlm {
        |FROM r WHERE rn > n // 4""".stripMargin
   }
 
+  /** The three embedding-dedup rows' input: the injected-copy fixture in
+    * double precision, base vectors ∪ copies.
+    */
+  private def nearDupBase(s: SparkSession, dir: String): DataFrame =
+    injectNearCopies(Tables.embeddings(s, dir)
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding")))._2
+
+  /** The three embedding-dedup rows' output: how many vectors survive, and
+    * their id sum.
+    */
+  private def survivors(kept: DataFrame): DataFrame =
+    kept.agg(count(lit(1)).as("n_survivors"), sum(col("vec_id")).as("sum_vec_id"))
+
   /** Embedding-cosine near-dup dedup, oracle-checked: the testdata has no
     * natural near-dups (max pairwise cosine ≈ 0.51), so both engines inject
     * perturbed copies (vec_id % 50 == 0 → id+100000, elements scaled
     * x·1.001 + 0.01 in double) and dedup at rounded cosine ≥ 0.99 — every
     * injected copy must drop, every original survive.
     */
-  private def embedNearDup(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001) + lit(0.01)).as("embedding"))
-    val base = e.unionByName(injected)
-    Similarity.dedupByCosine(base, threshold = 0.99)
-      .agg(count(lit(1)).as("n_survivors"), sum(col("vec_id")).as("sum_vec_id"))
-  }
+  private def embedNearDup(s: SparkSession, dir: String): DataFrame =
+    survivors(Similarity.dedupByCosine(nearDupBase(s, dir), threshold = 0.99))
 
   /** Same injected-near-dup dedup through the LSH-bucketed path
     * ([[Similarity.dedupByCosineLsh]]) against the SAME all-pairs DuckDB
     * oracle: hash-green means the bucketed 100 TB path reproduces the exact
     * baseline's survivors on this corpus, pair for pair.
     */
-  private def embedNearDupLsh(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001) + lit(0.01)).as("embedding"))
-    val base = e.unionByName(injected)
+  private def embedNearDupLsh(s: SparkSession, dir: String): DataFrame =
     // 8 tables for the same unit-norm-offset reason as injectedNearHits:
     // the injected pairs sit at cosine ≈ 0.9968, and 4 tables missed one
     // pair on the sf0.1 corpus (2001 survivors vs the oracle's 2000)
-    Similarity.dedupByCosineLsh(base, threshold = 0.99, bits = 8, tables = 8)
-      .agg(count(lit(1)).as("n_survivors"), sum(col("vec_id")).as("sum_vec_id"))
-  }
+    survivors(Similarity.dedupByCosineLsh(nearDupBase(s, dir), threshold = 0.99, bits = 8,
+      tables = 8))
 
   /** Same injected-near-dup dedup a third way — SemDeDup-style semantic
     * dedup ([[Similarity.semanticDedup]]: k-means clusters as the candidate
@@ -702,47 +697,10 @@ object QueriesLlm {
     * (the survivor set depends only on candidate RECALL plus the exact
     * cosine filter, not on centroid values).
     */
-  private def embedSemDedup(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    requireIdHeadroom(e, "vec_id", 100000L)
-    val injected = e.filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001) + lit(0.01)).as("embedding"))
-    val base = e.unionByName(injected)
-    Similarity.semanticDedup(base, threshold = 0.99, nlist = 16, nprobe = 2)
-      .agg(count(lit(1)).as("n_survivors"), sum(col("vec_id")).as("sum_vec_id"))
-  }
+  private def embedSemDedup(s: SparkSession, dir: String): DataFrame =
+    survivors(Similarity.semanticDedup(nearDupBase(s, dir), threshold = 0.99, nlist = 16,
+      nprobe = 2))
 
-  /** DBSCAN density clustering over embeddings ([[graft.functions.Dbscan]]),
-    * oracle-checked with all three point classes present. The corpus has no
-    * natural density structure (max pairwise cosine ≈ 0.51), so both engines
-    * inject a deterministic hub-spoke geometry around every 25th vector v:
-    *
-    *  - two TIGHT copies v·(1+j·1e-4) + j·1e-3 (cosine to v ≈ 0.99997) — with
-    *    the hub, the cluster's core triangle;
-    *  - four SPREAD spokes v + 0.4·(|v|/|w_j|)·w_j mixing in the neighboring
-    *    vectors w_j = vec(id+j): cosine to the hub ≈ 0.92–0.96 (≥ ε) but
-    *    spoke-to-spoke ≈ 0.81–0.91 (mostly < ε) — border points, adjacent to
-    *    the cores but with sub-minPts neighborhoods of their own;
-    *  - an isolated perturbed PAIR for every 17th vector — two mutually-near
-    *    points below minPts with no core neighbor: noise by definition, and
-    *    distinct from the trivially-noise original corpus.
-    *
-    * ε is round₆(cosine) ≥ 0.9, minPts = 6 counting the point itself. The
-    * emitted rows are one per cluster (rep = smallest core id, core/border
-    * split, id sum) plus a single cluster_rep = −1 noise row. Every
-    * classification is a deterministic pure function of the corpus, so the
-    * DuckDB replay matches hash-for-hash — including the occasional spoke
-    * pair that lands above ε and promotes a spoke to core (1 hub of 80 at
-    * sf0.1): both engines compute the identical rounded cosine.
-    *
-    * Scale: the one quadratic stage is the declared-exact ε-pair baseline;
-    * [[graft.functions.Dbscan.cluster]] takes the pair list as input
-    * precisely so a 100 TB corpus plugs a bucketed candidate generator (LSH
-    * tables / IVF cells) into the same downstream, which is all single-key
-    * aggregations plus the O(log n) component rounds.
-    */
   /** The injected hub-spoke corpus shared by both DBSCAN rows (exact and
     * LSH-bucketed ε-graph): returns (vec_id, embedding double[]).
     */
@@ -792,6 +750,35 @@ object QueriesLlm {
     clusters.unionByName(noise)
   }
 
+  /** DBSCAN density clustering over embeddings ([[graft.functions.Dbscan]]),
+    * oracle-checked with all three point classes present. The corpus has no
+    * natural density structure (max pairwise cosine ≈ 0.51), so both engines
+    * inject a deterministic hub-spoke geometry around every 25th vector v:
+    *
+    *  - two TIGHT copies v·(1+j·1e-4) + j·1e-3 (cosine to v ≈ 0.99997) — with
+    *    the hub, the cluster's core triangle;
+    *  - four SPREAD spokes v + 0.4·(|v|/|w_j|)·w_j mixing in the neighboring
+    *    vectors w_j = vec(id+j): cosine to the hub ≈ 0.92–0.96 (≥ ε) but
+    *    spoke-to-spoke ≈ 0.81–0.91 (mostly < ε) — border points, adjacent to
+    *    the cores but with sub-minPts neighborhoods of their own;
+    *  - an isolated perturbed PAIR for every 17th vector — two mutually-near
+    *    points below minPts with no core neighbor: noise by definition, and
+    *    distinct from the trivially-noise original corpus.
+    *
+    * ε is round₆(cosine) ≥ 0.9, minPts = 6 counting the point itself. The
+    * emitted rows are one per cluster (rep = smallest core id, core/border
+    * split, id sum) plus a single cluster_rep = −1 noise row. Every
+    * classification is a deterministic pure function of the corpus, so the
+    * DuckDB replay matches hash-for-hash — including the occasional spoke
+    * pair that lands above ε and promotes a spoke to core (1 hub of 80 at
+    * sf0.1): both engines compute the identical rounded cosine.
+    *
+    * Scale: the one quadratic stage is the declared-exact ε-pair baseline;
+    * [[graft.functions.Dbscan.cluster]] takes the pair list as input
+    * precisely so a 100 TB corpus plugs a bucketed candidate generator (LSH
+    * tables / IVF cells) into the same downstream, which is all single-key
+    * aggregations plus the O(log n) component rounds.
+    */
   private def dbscanClusters(s: SparkSession, dir: String): DataFrame = {
     val base = dbscanBase(s, dir)
     dbscanRollup(base,

@@ -497,20 +497,22 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitionBy write + key filter: pruning happens at partition level") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part_").toString
-    val t = Tables.ticks(spark, dir).select(col("symbol"), col("price"), col("seq"))
-    graft.sources.Sinks.append(t, tmp, partitionBy = Seq("symbol"))
-    val sym = t.select(col("symbol")).orderBy("symbol").limit(1).collect()(0).getString(0)
-    val back = spark.read.parquet(tmp).filter(col("symbol") === sym)
-    val ep = back.queryExecution.executedPlan.toString
-    // the FileScan renders as one line holding both filter segments — slice
-    // each segment's [...] out before asserting where the key landed
-    def segment(name: String): String =
-      ep.split(s"$name: \\[").drop(1).headOption.map(_.takeWhile(_ != ']')).getOrElse("")
-    assert(segment("PartitionFilters").contains("symbol"),
-      s"symbol filter must prune partition DIRECTORIES, not rows; got:\n$ep")
-    // and it must NOT degrade to a parquet row-group filter on the key
-    assert(!segment("PushedFilters").contains("symbol"),
-      s"a partition column never reaches PushedFilters; got:\n$ep")
+    withTempDir("graft_part_") { tmpDir =>
+      val tmp = tmpDir.toString
+      val t = Tables.ticks(spark, dir).select(col("symbol"), col("price"), col("seq"))
+      graft.sources.Sinks.append(t, tmp, partitionBy = Seq("symbol"))
+      val sym = t.select(col("symbol")).orderBy("symbol").limit(1).collect()(0).getString(0)
+      val back = spark.read.parquet(tmp).filter(col("symbol") === sym)
+      val ep = back.queryExecution.executedPlan.toString
+      // the FileScan renders as one line holding both filter segments — slice
+      // each segment's [...] out before asserting where the key landed
+      def segment(name: String): String =
+        ep.split(s"$name: \\[").drop(1).headOption.map(_.takeWhile(_ != ']')).getOrElse("")
+      assert(segment("PartitionFilters").contains("symbol"),
+        s"symbol filter must prune partition DIRECTORIES, not rows; got:\n$ep")
+      // and it must NOT degrade to a parquet row-group filter on the key
+      assert(!segment("PushedFilters").contains("symbol"),
+        s"a partition column never reaches PushedFilters; got:\n$ep")
+    }
   }
 }

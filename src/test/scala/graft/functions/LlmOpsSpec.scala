@@ -56,6 +56,13 @@ class LlmOpsSpec extends SparkSpec {
     val out = Similarity.bruteForceTopK(vecs.filter($"vec_id" === 0), vecs, k = 3)
       .orderBy("rank").select("neighbor_id").as[Long].collect()
     assert(out.toSeq == Seq(1L, 3L, 2L))
+    // hard negatives are that same exact ranking over the other labels only
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "cos", "rank").as[(Long, Long, Double, Int)].collect().toSet
+    val hard = ranked(Similarity.hardNegativeTopK(vecs, vecs, k = 3))
+    val otherLabels = Seq(0, 1).flatMap(l => ranked(Similarity.bruteForceTopK(
+      vecs.filter($"label" === l), vecs.filter($"label" =!= l), k = 3)))
+    assert(hard.size == 8 && hard == otherLabels.toSet)
   }
 
   test("langId picks the dominant stopword language; quality is in [0,1]") {

@@ -37,9 +37,15 @@ class PqSpec extends SparkSpec {
     val queries = vecs.filter(col("vec_id") < 3) // one query per cluster
     val top = Similarity.pqTopK(vecs, queries, k = 5, m = 4, ksub = 8, iters = 3)
       .select(col("query_id"), col("neighbor_id")).as[(Long, Long)].collect()
-    assert(top.length == 15)
-    top.foreach { case (q, n) =>
-      assert(n % 3 == q % 3, s"query $q retrieved cross-cluster neighbor $n")
+    // IVF-PQ: the same ADC scoring over the candidates of one routed list
+    val ivf = Similarity.ivfPqTopK(vecs, queries, k = 5, nlist = 3, nprobe = 1, m = 4,
+        ksub = 8, iters = 3)
+      .select(col("query_id"), col("neighbor_id")).as[(Long, Long)].collect()
+    for ((path, hits) <- Seq("pq" -> top, "ivfpq" -> ivf)) {
+      assert(hits.length == 15, s"$path: ${hits.length} hits")
+      hits.foreach { case (q, n) =>
+        assert(n % 3 == q % 3, s"$path: query $q retrieved cross-cluster neighbor $n")
+      }
     }
   }
 }

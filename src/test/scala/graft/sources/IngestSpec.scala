@@ -19,44 +19,46 @@ class IngestSpec extends SparkSpec {
   }
 
   test("CsvTickSource parses the wire format, diverts bad timestamps, asserts schema") {
-    val dir = Files.createTempDirectory("graft_ingest")
-    val path = stage(dir, "ticks.csv", Seq(
-      "symbol,timestamp,price,volume",
-      "AAA,2024-01-02 09:30:00.000001 UTC,10.5,2.0",
-      "AAA,2024-01-02 09:30:00.500000 UTC,10.6,1.0",
-      "AAA,2024-01-02 09:30:01 UTC,10.7,1.0", // second precision: regex fails
-      "AAA,not-a-timestamp,10.8,1.0",
-      "AAA,2024-01-02 09:30:02.000000 UTC,-1.0,1.0" // numeric invalid
-    ))
-    val vf = CsvTickSource.read(spark, path)
-    assert(vf.valid.count() == 2)
-    val reasons = vf.invalid.groupBy("reject_reason").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(reasons == Map("bad_timestamp_format" -> 2L, "nonpositive_price" -> 1L))
-    // parsed timestamps carry microsecond precision
-    val ts = vf.valid.agg(min(col("timestamp"))).collect()(0).getTimestamp(0)
-    assert(ts.toString == "2024-01-02 09:30:00.000001")
+    withTempDir("graft_ingest") { dir =>
+      val path = stage(dir, "ticks.csv", Seq(
+        "symbol,timestamp,price,volume",
+        "AAA,2024-01-02 09:30:00.000001 UTC,10.5,2.0",
+        "AAA,2024-01-02 09:30:00.500000 UTC,10.6,1.0",
+        "AAA,2024-01-02 09:30:01 UTC,10.7,1.0", // second precision: regex fails
+        "AAA,not-a-timestamp,10.8,1.0",
+        "AAA,2024-01-02 09:30:02.000000 UTC,-1.0,1.0" // numeric invalid
+      ))
+      val vf = CsvTickSource.read(spark, path)
+      assert(vf.valid.count() == 2)
+      val reasons = vf.invalid.groupBy("reject_reason").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(reasons == Map("bad_timestamp_format" -> 2L, "nonpositive_price" -> 1L))
+      // parsed timestamps carry microsecond precision
+      val ts = vf.valid.agg(min(col("timestamp"))).collect()(0).getTimestamp(0)
+      assert(ts.toString == "2024-01-02 09:30:00.000001")
 
-    val badHeader = stage(dir, "bad.csv", Seq("symbol,ts,price,volume", "AAA,x,1,1"))
-    val e = intercept[IllegalArgumentException](CsvTickSource.read(spark, badHeader))
-    assert(e.getMessage.contains("schema mismatch"))
+      val badHeader = stage(dir, "bad.csv", Seq("symbol,ts,price,volume", "AAA,x,1,1"))
+      val e = intercept[IllegalArgumentException](CsvTickSource.read(spark, badHeader))
+      assert(e.getMessage.contains("schema mismatch"))
+    }
   }
 
   test("Sinks.writeValidated persists both streams and reports counts") {
     val session = spark
     import session.implicits._
-    val dir = Files.createTempDirectory("graft_sink")
-    val ticks = Seq(
-      ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), 1.0, 1.0),
-      ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:01"), -1.0, 1.0),
-      ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:02"), 2.0, -3.0)
-    ).toDF("symbol", "timestamp", "price", "volume")
-    val (nv, ni) = Sinks.writeValidated(TickOps.validate(ticks),
-      s"$dir/valid", s"$dir/invalid")
-    assert((nv, ni) == (1L, 2L))
-    assert(spark.read.parquet(s"$dir/valid").count() == 1)
-    val inv = spark.read.parquet(s"$dir/invalid")
-    assert(inv.columns.contains("reject_reason") && inv.count() == 2)
+    withTempDir("graft_sink") { dir =>
+      val ticks = Seq(
+        ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:00"), 1.0, 1.0),
+        ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:01"), -1.0, 1.0),
+        ("AAA", java.sql.Timestamp.valueOf("2024-01-02 10:00:02"), 2.0, -3.0)
+      ).toDF("symbol", "timestamp", "price", "volume")
+      val (nv, ni) = Sinks.writeValidated(TickOps.validate(ticks),
+        s"$dir/valid", s"$dir/invalid")
+      assert((nv, ni) == (1L, 2L))
+      assert(spark.read.parquet(s"$dir/valid").count() == 1)
+      val inv = spark.read.parquet(s"$dir/invalid")
+      assert(inv.columns.contains("reject_reason") && inv.count() == 2)
+    }
   }
 
   test("filterWeekdays drops Eastern-weekend rows only (P6)") {
